@@ -36,18 +36,19 @@ object Main {
       // must not see unrelated siblings): stage a plain file into its own
       // temp dir
       val in = new java.io.File(o.inputFile)
-      val streamDir =
-        if (in.isFile) {
-          val dir = java.nio.file.Files.createTempDirectory("graft-stream")
-          java.nio.file.Files.copy(in.toPath, dir.resolve(in.getName))
-          dir.toString
-        } else o.inputFile
-      val lines = spark.readStream.text(streamDir).toDF("text")
-      val q = graft.streaming.StreamingJobs.wordCountToStore(
-        spark, lines, new FileDocumentStoreFactory(o.outputDir),
-        o.collection, o.maxBatchSize)
-      q.processAllAvailable()
-      q.stop()
+      val staged = if (in.isFile) {
+        val dir = java.nio.file.Files.createTempDirectory("graft-stream")
+        java.nio.file.Files.copy(in.toPath, dir.resolve(in.getName))
+        Some(dir.toFile)
+      } else None
+      try {
+        val lines = spark.readStream
+          .text(staged.fold(o.inputFile)(_.toString)).toDF("text")
+        val q = graft.streaming.StreamingJobs.wordCountToStore(
+          spark, lines, new FileDocumentStoreFactory(o.outputDir),
+          o.collection, o.maxBatchSize)
+        try q.processAllAvailable() finally q.stop()
+      } finally staged.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
       val f = new FileDocumentStoreFactory(o.outputDir)
       f.readAll(o.collection).size.toLong
     })

@@ -360,8 +360,8 @@ object DedupQueries {
     // Convergence count folded into the checkpoint materialization
     // (r17 opt, VERDICT item 1): one job per round instead of
     // checkpoint + a second full filter/count pass over the rows it
-    // just materialized. Labels are non-null longs (ids) — the
-    // localCheckpointCounting contract.
+    // just materialized. Labels are non-null longs (ids); a null would
+    // count as changed, never as converged.
     var changed = 1L
     while (changed > 0) {
       val (next, ch) = org.apache.spark.sql.GraftBridge

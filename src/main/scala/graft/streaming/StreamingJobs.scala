@@ -369,6 +369,7 @@ object StreamingJobs {
     // idempotence meaningful across RESTARTS (a temp checkpoint only
     // covers retries within one run)
     checkpoint.foreach(c => w.option("checkpointLocation", c))
+    LocalCheckpointFileManager.install(spark)
     w.start()
   }
 }

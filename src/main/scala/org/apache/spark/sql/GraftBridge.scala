@@ -25,14 +25,16 @@ object GraftBridge {
   /** Materialize `df` exactly like eager `Dataset.localCheckpoint()`
     * (execute, copy rows, localCheckpoint the RDD, count to
     * materialize, wrap in a LogicalRDD) while counting — in the SAME
-    * materialization pass — the rows whose non-null LONG columns
-    * `aName` and `bName` differ. Folds the connected-components
+    * materialization pass — the rows whose LONG columns `aName` and
+    * `bName` differ. Folds the connected-components
     * convergence test into the per-round checkpoint job (round-17 opt):
     * previously every fixpoint round paid a second full job
     * (`filter(a =!= b).count()`) over the rows the checkpoint had just
-    * materialized. Caller contract: both columns are LongType and
-    * never null (labels are doc ids; an UnsafeRow getLong on a null
-    * field would read garbage silently).
+    * materialized. Both columns must be LongType. A row with a null in
+    * either column counts as changed: `getLong` on a null field reads
+    * whatever the slot holds (0 in an UnsafeRow), so an unguarded
+    * null could compare equal and end a fixpoint early (a null that
+    * never goes away keeps the fixpoint running instead).
     *
     * Accumulator discipline: the count is taken inside a
     * transformation, so a retried/speculated task could over-count a
@@ -57,7 +59,8 @@ object GraftBridge {
     val acc = spark.sparkContext.longAccumulator("graft.checkpoint.changed")
     val rdd = qe.toRdd.mapPartitions { it =>
       it.map { r =>
-        if (r.getLong(ia) != r.getLong(ib)) acc.add(1L)
+        if (r.isNullAt(ia) || r.isNullAt(ib) || r.getLong(ia) != r.getLong(ib))
+          acc.add(1L)
         r.copy()
       }
     }

@@ -24,6 +24,18 @@ class CheckpointCountingSpec extends SparkSpec {
     assert(out.collect().toSet === in.collect().toSet)
   }
 
+  test("a null in either column counts as changed, never as converged") {
+    // getLong on a null UnsafeRow field reads 0: unguarded, the
+    // (null, 0) and (null, null) rows would compare equal
+    val in = spark.range(4).select(col("id"),
+      when(col("id") < 2, lit(null)).otherwise(lit(0L)).cast(LongType).as("old_label"),
+      when(col("id") === 1, lit(null)).otherwise(lit(0L)).cast(LongType).as("label"))
+    val (out, changed) =
+      GraftBridge.localCheckpointCounting(in, "label", "old_label")
+    assert(changed === 2L)
+    assert(out.collect().toSet === in.collect().toSet)
+  }
+
   test("converged input counts zero") {
     val in = labelsDf(Seq((1L, 7L, 7L), (2L, 7L, 7L)))
     val (out, changed) =

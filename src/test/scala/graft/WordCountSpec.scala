@@ -67,6 +67,22 @@ class WordCountSpec extends SparkSpec {
     assert(m("max_len") == 3)
   }
 
+  test("--implementation=streaming removes the input directory it stages") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def staged() = Files.list(tmp).iterator.asScala
+      .filter(_.getFileName.toString.startsWith("graft-stream")).toSet
+    val before = staged()
+    val input = Files.createTempFile("graft-cli", ".txt")
+    Files.write(input, "hi there\nhi\n".getBytes)
+    val o = graft.core.Options.parse(Array("--implementation=streaming",
+      s"--inputFile=$input",
+      s"--outputDir=${Files.createTempDirectory("graft-cli-store")}"))
+    assert(graft.core.Main.implementations("streaming")(o, spark) == 2L)
+    assert(staged() -- before == Set.empty)
+  }
+
   test("reference flag aliases parse to the same options") {
     val o = graft.core.Options.parse(Array(
       "--inputFile=/x/kinglear.txt",
