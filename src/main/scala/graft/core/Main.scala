@@ -21,7 +21,8 @@ object Main {
   val implementations: Map[String, (Options, SparkSession) => Long] = Map(
     "naive" -> { (o, spark) =>
       val counts = WordCount.countWords(spark.read.textFile(o.inputFile).toDF("value"))
-      DocSink.writeNaive(counts, new FileDocumentStoreFactory(o.outputDir), o.collection)
+      DocSink.writeBatched(counts, new FileDocumentStoreFactory(o.outputDir),
+        o.collection, batchSize = 1)._1
     },
     "batch" -> { (o, spark) =>
       val counts = WordCount.countWords(spark.read.textFile(o.inputFile).toDF("value"))

@@ -62,20 +62,12 @@ object Checkpoint {
   def partitionedBy(df: DataFrame, keys: Seq[String]): DataFrame = {
     val cols = keys.map(df.col)
     if (inlineForAudit) df.repartition(cols: _*)
-    else numShufflePartitions(df) match {
-      // "auto"-style non-numeric partition settings: fall back to the
-      // plain keyed checkpoint (correct, just unstamped) instead of
-      // turning every call site into a NumberFormatException
-      case None => df.repartition(cols: _*).localCheckpoint()
-      case Some(n) =>
-        GraftBridge.stampHashPartitioning(
-          df.repartition(n, cols: _*).localCheckpoint(), n, keys: _*)
+    else {
+      val n = GraftBridge.shufflePartitions(df.sparkSession)
+      GraftBridge.stampHashPartitioning(
+        df.repartition(n, cols: _*).localCheckpoint(), n, keys: _*)
     }
   }
-
-  private def numShufflePartitions(df: DataFrame): Option[Int] =
-    scala.util.Try(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt).toOption
 
   /** Size-ADAPTIVE keyed stamp (r17, VERDICT item 3), for the sites
     * where the round-16 A/Bs measured the pinned-count stamped

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 
 /** Parallelism floor for quadratic pair stages (r17).
   *
@@ -16,12 +16,16 @@ import org.apache.spark.sql.DataFrame
   * provide it — `repartition(n)` iff the frame has fewer partitions
   * than `spark.sql.shuffle.partitions` (scale-adaptive by the bench
   * contract), pass-through otherwise.
+  *
+  * Hazard: the partition count is read from `df.rdd`, which plans the
+  * frame physically. Under AQE, planning a frame that contains an
+  * exchange executes its upstream shuffle stages right there, and the
+  * query that consumes the result runs them again. Pass only frames
+  * whose top is a scan or a checkpoint, as every call site does today.
   */
 object Parallelism {
   def floor(df: DataFrame): DataFrame = {
-    val n = scala.util.Try(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(32)
+    val n = GraftBridge.shufflePartitions(df.sparkSession)
     if (df.rdd.getNumPartitions >= n) df else df.repartition(n)
   }
 }

@@ -925,8 +925,8 @@ object DedupQueries {
     //
     // Scale: pruning power = band width vs projection spread (σ = 1/√dim
     // on unit vectors, so ±~0.5 at dim 64). MEASURED at sf1 (200M pairs,
-    // graft.tools.BandSelectivity, SCALE.md §Band selectivity): a single
-    // direction prunes NOTHING at any practical threshold — W = √(2−2t)
+    // SCALE.md §Band selectivity, measured): a single direction prunes
+    // NOTHING at any practical threshold — W = √(2−2t)
     // is 1.095/0.775/0.447 at t = 0.4/0.7/0.9, always ≥ the spread, so
     // the corpus occupies 2-4 bands and ±1-band candidates are ~100% of
     // all pairs. The single-direction win is hash-join vs nested loop
@@ -973,9 +973,9 @@ object DedupQueries {
     // output is identical to dedup_embedding and shares its brute-force
     // oracle. Pruning multiplies across independent directions — the
     // fᵖ law measured to ~1% on a clustered 200M-pair corpus
-    // (graft.tools.BandSelectivity clustered mode; SCALE.md §Composite
-    // AND-bands: f=0.753 per direction at t=0.99 → 0.563 at p=2, 0.442
-    // at p=3). The same measurement bounds the approach: random-
+    // (SCALE.md §Composite AND-bands, measured: f=0.753 per direction
+    // at t=0.99 → 0.563 at p=2, 0.442 at p=3). The same measurement
+    // bounds the approach: random-
     // direction f = P(|Δproj| ≤ W) never gets small at practical
     // thresholds, and each extra direction multiplies the join count
     // by 3 while pruning only ×f — AND-bands pay where per-match work

@@ -893,15 +893,19 @@ object ExtraRelationalQueries {
       // recursion safety-net override the UnionLoop needed at sf1
       // disappears with the loop. The DuckDB oracle still runs the
       // recursive-CTE formulation, so the closure semantics stay pinned
-      // cross-engine; oracle hash-exact at sf0.01 AND sf0.1.
+      // cross-engine; oracle hash-exact at sf0.01 AND sf0.1. The key is
+      // widened to BIGINT first: an INT shift masks its distance to 5
+      // bits, so on an int32 p_partkey levels i >= 32 would re-emit pk1
+      // itself and duplicate closure rows.
       qs.sql("""
         WITH anc AS (
-          SELECT p_partkey + 1 AS pk1,
+          SELECT CAST(p_partkey AS BIGINT) + 1 AS pk1,
                  CAST(p_retailprice AS DECIMAL(12,2)) AS price,
                  node
           FROM part
           LATERAL VIEW explode(filter(transform(sequence(0, 62),
-            i -> shiftright(p_partkey + 1, i)), x -> x >= 1)) AS node
+            i -> shiftright(CAST(p_partkey AS BIGINT) + 1, i)),
+            x -> x >= 1)) AS node
         ),
         agg AS (
           SELECT COALESCE(pk1, node) AS nd, pk1 IS NOT NULL AS is_depth,

@@ -1,7 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.sql.DataFrame
 
 /** The reference's two sink strategies (its raison d'être), Spark-first.
   *
@@ -16,7 +15,11 @@ import org.apache.spark.util.LongAccumulator
   * lifecycle (client per partition, buffer, flush, close). We implement the
   * *intended* atomic-batch semantics (SURVEY.md §2.1 fidelity note):
   * `iterator.grouped(batchSize)` → one atomic `commitBatch` per group. The
-  * upsert is keyed (last-write-wins) so task retries are safe.
+  * upsert is keyed (last-write-wins) so task retries are safe. The naive
+  * strategy is `writeBatched` with `batchSize = 1`: one blocking
+  * single-doc commit per element (the reference's per-element `put`),
+  * still on one store per partition — a per-element client is the
+  * anti-pattern the reference exists to demonstrate, pure overhead here.
   *
   * Scale note (100 TB): writes are fully partition-parallel, the driver only
   * ships the serializable factory closure, and nothing is collected. Batch
@@ -83,7 +86,6 @@ object DocSink {
     val spark = df.sparkSession
     val docsWritten = spark.sparkContext.longAccumulator("docsWritten")
     val batchesCommitted = spark.sparkContext.longAccumulator("batchesCommitted")
-    val flushNanos = spark.sparkContext.longAccumulator("flushNanos")
     val rows = df.toDF("docId", "value")
     val key = jobKey.getOrElse(java.util.UUID.randomUUID().toString)
     rows.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
@@ -96,14 +98,10 @@ object DocSink {
             val docs = group.map { r =>
               r.getString(0) -> Map(fieldName -> r.getLong(1))
             }.toSeq
-            val t0 = System.nanoTime()
             store.commitBatchKeyed(
               s"$key/p$pid/f$flushSeq/c${contentKey(docs)}",
               collection, docs)
             flushSeq += 1
-            // per-flush latency — the reference logs this in ms per flush
-            // (FirestoreUpdateDoFn.java:83,92-93)
-            flushNanos.add(System.nanoTime() - t0)
             docsWritten.add(docs.size)
             batchesCommitted.add(1)
           }
@@ -111,42 +109,5 @@ object DocSink {
       }
     }
     (docsWritten.value, batchesCommitted.value)
-  }
-
-  /** Naive sink — one blocking put per element
-    * (impl/NaiveImplementation.java:55-60). Even "naive" in Spark amortizes
-    * the client per partition: a per-element client (what the reference's
-    * naive impl does at :49-53) is the anti-pattern the reference exists to
-    * demonstrate, and would be pure overhead here.
-    */
-  def writeNaive(
-      df: DataFrame,
-      factory: DocumentStoreFactory,
-      collection: String,
-      fieldName: String = "count",
-      jobKey: Option[String] = None): Long = {
-    val docsWritten = df.sparkSession.sparkContext.longAccumulator("docsWritten")
-    val key = jobKey.getOrElse(java.util.UUID.randomUUID().toString)
-    df.toDF("docId", "value").foreachPartition {
-      (it: Iterator[org.apache.spark.sql.Row]) =>
-        if (it.hasNext) {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          var i = 0L
-          val store = factory.open()
-          // one blocking single-doc commit per element (= the reference's
-          // per-element `put`), keyed per element for retry-safe feeds;
-          // the content term matters here exactly as in writeBatched —
-          // a reordered retry's element e0 holds a DIFFERENT doc, and
-          // suppressing it by ordinal alone would lose its feed entry
-          try it.foreach { r =>
-            val doc = Seq(r.getString(0) -> Map(fieldName -> r.getLong(1)))
-            store.commitBatchKeyed(
-              s"$key/p$pid/e$i/c${contentKey(doc)}", collection, doc)
-            i += 1
-            docsWritten.add(1)
-          } finally store.close()
-        }
-    }
-    docsWritten.value
   }
 }

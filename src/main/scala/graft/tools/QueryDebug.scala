@@ -1,63 +1,87 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Dev utility: inspect or time registered queries by name.
+/** Dev utility: inspect, time, audit or dump registered queries by name.
   *
-  *   QueryDebug explain <query>[,query...] [sfDir]   — physical plan dump
-  *   QueryDebug time <sfDir> <query>[,query...] [reps] — wall-clock timing
+  *   QueryDebug explain <query>[,query...] [sfDir]    — physical plan dump
+  *   QueryDebug explainf <query>[,query...] <outDir> <suffix> [sfDir]
+  *                                                     — formatted plans to files
+  *   QueryDebug time <sfDir> <query>[,query...] [reps] — wall clock + work counters
+  *   QueryDebug audit [sfDir]                          — wide-shuffle audit
+  *   QueryDebug dump <sfDir> <query>[,query...] <outDir>
+  *                                                     — Verify's parquet dump
+  *   QueryDebug plans <out.md> [sfDir]                 — regenerate PLANS.md
   *
-  * (Replaces the former throwaway graft.tmp.{Expl,TimeQ} mains.)
+  * Every mode runs on ONE session built by the rule Bench and Verify
+  * use: SPARK_GRAFT_CPUS threads and shuffle partitions (default: the
+  * machine's processor count), UTC, UI off. `audit` additionally turns
+  * AQE off on that session.
   */
 object QueryDebug {
-  def main(args: Array[String]): Unit = args(0) match {
-    case "explain" => explain(args.drop(1))
-    case "explainf" => explainf(args.drop(1))
-    case "time"    => time(args.drop(1))
-    case "audit"   => audit(args.drop(1))
-    case "dump"    => dump(args.drop(1))
-    case other =>
-      sys.error(s"unknown mode '$other' (expected explain|explainf|time|audit|dump)")
+  def main(args: Array[String]): Unit = {
+    val run: (SparkSession, Array[String]) => Boolean =
+      args.headOption.getOrElse("") match {
+        case "explain"  => (s, a) => { explain(s, a); true }
+        case "explainf" => (s, a) => { explainf(s, a); true }
+        case "time"     => (s, a) => { time(s, a); true }
+        case "dump"     => (s, a) => { dump(s, a); true }
+        case "plans"    => (s, a) => { plans(s, a); true }
+        case "audit"    => audit
+        case other => sys.error(s"unknown mode '$other' " +
+          "(expected explain|explainf|time|audit|dump|plans)")
+      }
+    val spark = session()
+    val clean = try run(spark, args.drop(1)) finally spark.stop()
+    if (!clean) sys.exit(1)
   }
+
+  private def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  private def sfDirArg(args: Array[String], i: Int): String =
+    if (args.length > i) args(i) else "/root/testdata/sf0.01"
+
+  /** The executed plan as `explain` and `plans` print it. */
+  private def planText(df: DataFrame): String =
+    df.queryExecution.executedPlan.toString.take(4000)
 
   /** explainf <names,comma-sep> <outDir> <suffix> [sfDir]: writes each
     * query's `.explain("formatted")` output to <outDir>/<name>_<suffix>.txt
     * — the plans/r16 optimization-evidence artifact. */
-  private def explainf(args: Array[String]): Unit = {
+  private def explainf(spark: SparkSession, args: Array[String]): Unit = {
     val names = args(0).split(",")
     val outDir = args(1)
     val suffix = args(2)
-    val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    val sfDir = sfDirArg(args, 3)
+    Files.createDirectories(Paths.get(outDir))
     for (n <- names) {
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"), txt)
+      Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"), txt)
       println(s"wrote $outDir/${n}_$suffix.txt (${txt.length} chars)")
     }
-    spark.stop()
   }
 
   /** dump <sfDir> <names,comma-sep> <outDir>: Verify's per-query parquet
     * dump for a subset — iterating on ONE oracle without a full Verify. */
-  private def dump(args: Array[String]): Unit = {
+  private def dump(spark: SparkSession, args: Array[String]): Unit = {
     val Array(sfDir, names, outDir) = args
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     for (n <- names.split(","))
       graft.SparkEntry.queries(n)(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/$n")
-    spark.stop()
   }
 
   // raw source columns by substring; derived wide names (token arrays /
@@ -115,22 +139,18 @@ object QueryDebug {
     * raw or derived wide column (text/embedding/token arrays/vectors) —
     * the scale-killer class (wide columns crossing the wire for
     * something an aggregate or narrow projection should have reduced
-    * first). Exit code 1 on any non-allowlisted hit, AND on any query
-    * that failed to plan (a broken audit must not read as a passing
-    * one). */
-  private def audit(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    * first). Not clean (exit code 1) on any non-allowlisted hit, AND on
+    * any query that failed to plan (a broken audit must not read as a
+    * passing one). */
+  private def audit(spark: SparkSession, args: Array[String]): Boolean = {
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     // Walk build plans too: skipping localCheckpoint keeps index-build
     // lineage in the plan, so exchanges below materialization points —
     // the round-5 audit blind spot — are flagged like any other. The
     // allowlist below is then the ONLY justification record; in-code
     // comments no longer shield an exchange from the walk.
     graft.operators.Checkpoint.inlineForAudit = true
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
+    val sfDir = sfDirArg(args, 0)
     // Known-inherent wide shuffles — each entry must justify WHY the
     // operator cannot reduce the column before the exchange. Anything
     // not listed here fails the audit.
@@ -194,34 +214,101 @@ object QueryDebug {
     }
     println(s"audit: $hits wide shuffles, $errors errors across " +
       s"${graft.SparkEntry.queries.size} queries")
-    spark.stop()
-    if (hits > 0 || errors > 0) sys.exit(1)
+    hits == 0 && errors == 0
   }
 
-  private def explain(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
+  private def explain(spark: SparkSession, args: Array[String]): Unit = {
+    val sfDir = sfDirArg(args, 1)
     for (n <- args(0).split(",")) {
       println(s"===== $n")
-      println(graft.SparkEntry.queries(n)(spark, sfDir)
-        .queryExecution.executedPlan.toString.take(3500))
+      println(planText(graft.SparkEntry.queries(n)(spark, sfDir)))
     }
-    spark.stop()
   }
 
-  private def time(args: Array[String]): Unit = {
+  /** Representative queries for PLANS.md, each with what its plan shows
+    * — the artifact backing the "audit every plan" design rule. */
+  private val picks: Seq[(String, String)] = Seq(
+    "q1_pricing_summary" -> "scan-heavy multi-aggregate: pushed filter + pruned columns + partial/final HashAggregate",
+    "q3_customers_per_region" -> "dim chain: both dims broadcast, zero shuffles on the fact side before the tiny agg exchange",
+    "q4_revenue_by_priority" -> "fact-fact join (AQE picks broadcast at this SF; SMJ at scale)",
+    "q9_rank_orders_per_customer" -> "window rank: single hash-partition exchange + sort, WindowGroupLimit pushes the rn<=3 limit below the full window",
+    "q11_top_orders" -> "global top-k: TakeOrderedAndProject (per-partition heap + driver merge of k rows, no global sort)",
+    "q33_asof_last_click" -> "as-of via union + running window (one shuffle on user_id)",
+    "q41_asof_custom" -> "as-of via the custom AsOfJoinExec: co-partitioned exchanges + in-partition (key,time) sorts + O(n+m) merge",
+    "dedup_minhash_lsh" -> "MinHash custom aggregate: partial_minhashaggregator below the exchange (signatures shuffle to group, shingles only at the one-time index build); localCheckpoint shares the shingle index across banding + verification",
+    "sim_topk_bruteforce" -> "brute-force ANN baseline: broadcast query vector, codegen'd graft_dot, TakeOrderedAndProject",
+    "dedup_ngram_prefix" -> "PPJoin prefix filter: rarity-ranked per-doc prefix index feeds the pair join (hot shingles excluded); exact-jaccard verify over semi-joined candidate docs",
+    "dedup_embedding_lsh" -> "banded projection join: band equi-joins replace the BroadcastNestedLoop all-pairs, recall 1.0 by the Cauchy-Schwarz band containment",
+    "decontam_overlap" -> "decontamination sweep: distinct benchmark shingles broadcast against the corpus inverted index",
+    "pack_sequences" -> "per-shard sequence packing: source-partitioned running-sum window (no global window), generator explode for spanning docs",
+    "sample_stratified" -> "stratified quota sample: per-shard ranking window on md5 order, WindowGroupLimit bounds each partition's sort",
+    "sample_weighted" -> "Efraimidis-Spirakis weighted sample: per-row −ln(u)/w race key then the same per-stratum ranking window shape as sample_stratified (WindowGroupLimit, narrow columns only)",
+    "dedup_clusters" -> "connected components: one narrow left join against the MEMOIZED label table (the components fixpoint runs once per dataset and persists to scratch parquet - the ivfIndex precedent; clusters/canonical/split_leakage_safe all read it)",
+    "dedup_canonical" -> "survivor selection: the memoized label table joined to per-doc token counts, then ONE narrow window over (cluster_id, n_tokens, doc_id) picks the longest member — token counts cross the wire, text never does",
+    "q48_salted_agg" -> "two-stage salted aggregation: both shuffles keyed (key,salt) then key — hot keys spread across reducers",
+    "decontam_bloom" -> "Bloom-prefiltered decontamination: codegen'd bit-test predicate (literal filter array) ahead of the exact broadcast verify join",
+    "q55_decile_bucket" -> "scalable NTILE: deterministic quantile-boundary buckets + per-bucket local ranks + broadcast offsets (window runs over #buckets rows only; integer bucket math)",
+    "dedup_paragraph" -> "paragraph-level corpus dedup: WindowGroupLimit prunes to the first occurrence per chunk before the final window; reassembly is one doc_id-keyed collect_list aggregate",
+    "curate_shard_assign" -> "balanced shard assignment: literal CASE-chain bucket projection (codegen'd), one bucket exchange + broadcast offsets, then the per-shard aggregate",
+    "sketch_cms_topk" -> "count-min heavy hitters: counter matrix built via partial_countminaggregator below the exchange; estimates are pure literal-array lookups beside the exact counts",
+    "q62_bitmap_distinct" -> "exact distinct via mergeable bitmaps: (group, bucket) segments OR map-side — no Expand re-shuffle of raw ids, no estimate",
+    "q65_salted_join" -> "skew-salted join: deterministic fact salt + buckets× dim replication, join on (key, salt) — a hot key spans 8 reducers",
+    "q60_sessionize" -> "gap-rule sessionization: lag + running-sum windows stacked on ONE user_id exchange; the session aggregate reuses the same partitioning",
+    "dedup_substr_remove" -> "ExactSubstr span removal: gram-keyed first-occurrence window, covered positions anti-joined on (doc_id,pos), collect_list reassembly",
+    "dedup_embedding" -> "all-pairs exact embedding dedup (oracle baseline): fused graft_cosine inside WholeStageCodegen over the BroadcastNestedLoop pairs",
+    "q56_zorder_key" -> "Z-order key: pure mask-shift projection above the scan, one aggregate exchange on the bucket",
+    "q66_outer_explode" -> "OUTER generator: explode + partial/final count — the only exchange carries (doc_id, count), never the raw text (parallelism is reader splits, not a repartition)",
+    "q58_funnel_steps" -> "ordered funnel: per-step user-keyed aggregates chained on one partitioning; event_type filters pushed to the parquet scan",
+    "ta_boilerplate" -> "boilerplate span removal: hot-gram set broadcast into the occurrence scan, covered positions anti-joined on (doc_id,pos), order-preserving reassembly as one partial+final collect_list aggregate",
+    "pipeline_e2e" -> "end-to-end curation verdict: stage outputs are checkpointed seams (quality -> NARROW fingerprint-window exact dedup -> CC over canonicals), final verdict is two doc_id-keyed left joins",
+    "sim_ann_batch" -> "batched-query ANN: probe set broadcast into the cell join (corpus vectors never shuffle), per-query top-k via partial_topkaggregator heaps, coverage left-join",
+    "sim_ann_ivf_indexed" -> "persisted IVF probe: cell IN (...) lands in PartitionFilters — only nProbe cell directories are listed, broadcast query vector, TakeOrderedAndProject",
+    "dedup_simhash_md5" -> "oracle-checked SimHash twin: md5-derived 60-bit token hashes; the signature build (partial_simhashaggregator below one doc exchange) sits under the checkpoint feeding both sides of the 16-bit piece-blocked self-join — run the audit's inline mode to see it",
+    "curate_shuffle" -> "seeded global permutation: md5 hash key projection + quantile-bucketed global rank — no single-partition window, no wide columns in any exchange",
+    "sim_quantize_int8" -> "fused native graft_quantize_int8: zero exchanges — maxabs computed inside the expression's own loop (no CollapseProject quadratic trap, no barrier)",
+    "dedup_semantic" -> "SemDeDup: checkpointed (cell-filtered, unit-normalized) assignment feeds both self-join sides; cell self-join broadcasts at this SF (co-partitioned SMJ at scale), one graft_dot per pair inside the semi-join condition, dup flag via narrow id left-join",
+    "curate_prototypes" -> "D4 prototypicality pruning: k-row broadcast centroid join, vector DROPPED before the per-cell window exchange — only (vec_id, cell, dist_sq) crosses the wire",
+    "curate_lm_score" -> "bigram LM quality score: model build is two narrow-token-key aggregates (map-side combine), vocab scalar broadcast; scoring join shuffles (doc_id,w1,w2) on the bigram key — model is vocab-scale, NOT broadcast at 100 TB; per-doc mean partial-aggregates before its exchange",
+    "curate_dsir" -> "DSIR importance resampling: hashed-feature model is ≤4096 rows at ANY corpus size → broadcast into the occurrence stream (zero model shuffles, contrast curate_lm_score); per-doc mean partial-aggregates; top-quarter cut via the quantile-bucketed global row number (no single-partition window)",
+    "sim_rp_reduce" -> "JL random projection 64→16: the k×d matrix is a LITERAL folded into one whole-stage-codegen projection — no model table, no join, zero exchanges at any corpus size; runs map-side in the scan stage like sim_quantize_int8",
+    "ta_bpe_encode" -> "BPE encode with the learned merge list: ≤20-row model collected once per dataset (ivfModel precedent) and folded into a 20-deep replace cascade — encoding is a pure per-row projection, zero exchanges beyond the trainer's narrow (pair,cnt) aggregate; the encoded string never crosses a shuffle",
+    "decontam_minhash" -> "fuzzy benchmark decontamination: benchmark bands + shingle sets broadcast (eval suites stay KBs at any corpus size); corpus pays ONE signature aggregate (64 longs per doc via partial_minhashaggregator, shingles stay in the index build) and a broadcast band join; exact-jaccard verify runs only over candidate docs",
+    "mm_phash_dct" -> "real integer-DCT pHash: graft_phash is ONE codegen'd scalar above the scan (payloads never shuffle; only (doc_id, sig) enters the checkpointed piece-blocked self-join); contrast mm_phash_dedup's explode+vote pipeline",
+    "mm_pipeline_e2e" -> "composed multimodal pipeline over the REAL decode chain (round 15: corpus = text families + planted strict-PNM filmstrips with captions): gate + align screen are narrow projections over the checkpointed corpus; graft_phash genuinely decodes+DCTs conformers map-side; the pair join sees only gated+aligned (doc_id, sig) rows; per-frame hashBand perceptual hashes explode only for final survivors; verdict = three doc_id-keyed left joins",
+    "stats_ks_drift" -> "exact KS drift, fully lazy: percentile_approx boundary array broadcast-crossed onto the distinct-value grid (no driver stats job at construction); running CDFs via broadcast bucket offsets + in-bucket windows")
+
+  /** plans <out.md> [sfDir]: writes every pick's executed plan under its
+    * note, then carries over verbatim everything from the hand-annotated
+    * marker on in the existing <out.md> — condensed plan sketches, not
+    * regenerable dumps. */
+  private def plans(spark: SparkSession, args: Array[String]): Unit = {
+    val out = Paths.get(args(0))
+    val sfDir = sfDirArg(args, 1)
+    val sb = new StringBuilder
+    sb.append("# PLANS — physical plans of representative queries " +
+      s"(${Paths.get(sfDir).getFileName}, auto-generated by graft.tools.QueryDebug plans)\n\n")
+    sb.append("Regenerate: `tools/run.sh graft.tools.QueryDebug plans PLANS.md`.\n")
+    picks.foreach { case (name, note) =>
+      val df = graft.SparkEntry.queries(name)(spark, sfDir)
+      sb.append(s"\n## $name\n\n$note\n\n```\n")
+      sb.append(planText(df))
+      sb.append("\n```\n")
+    }
+    val marker = "<!-- HAND-ANNOTATED BELOW"
+    val tail =
+      if (Files.exists(out)) {
+        val cur = Files.readString(out)
+        val i = cur.indexOf(marker)
+        if (i >= 0) "\n" + cur.substring(i) else ""
+      } else ""
+    Files.writeString(out, sb.toString + tail)
+    println(s"wrote $out")
+  }
+
+  private def time(spark: SparkSession, args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => }
     // Contention-proof work counters per rep: the box's roaming
     // bandwidth co-tenant makes wall-clock A/Bs swing ±50%, while job/
@@ -306,6 +393,5 @@ object QueryDebug {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }
-    spark.stop()
   }
 }

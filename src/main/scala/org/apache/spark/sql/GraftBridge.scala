@@ -17,6 +17,15 @@ object GraftBridge {
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The session's `spark.sql.shuffle.partitions`, read typed. A non-int
+    * value never reaches this read: `spark.conf.set` and `SET` reject it
+    * with INVALID_CONF_VALUE.TYPE_MISMATCH, and a builder or SparkConf
+    * value fails the same way when the session state is first built,
+    * before any DataFrame exists. */
+  def shufflePartitions(spark: SparkSession): Int =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+      .getConf(internal.SQLConf.SHUFFLE_PARTITIONS)
+
   /** The analyzed logical plan backing a DataFrame. */
   def analyzedPlan(df: Dataset[_]):
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

@@ -3,9 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.PHash64
 
-/** Pins the two invariants behind DecodeVolumeAB's measured memory
-  * bound (round 15: decode-seam per-task memory ≲200 MB at
-  * 4096×4096×3, bounded by the FORMAT cap, not the corpus), so a
+/** Pins the two invariants behind the measured decode-seam memory
+  * bound (SCALE.md §Round-15: the decode seam at the frame-size bound —
+  * per-task memory ≲200 MB at 4096×4096×3, bounded by the FORMAT cap,
+  * not the corpus), so a
   * future decoder edit cannot silently unbound the seam:
   *
   *  1. `parsePnm` enforces the 4096-per-dimension cap — the format

@@ -50,7 +50,7 @@ class DocSinkSpec extends SparkSpec {
     val (n1, n2) = ("naive1", "batch1")
     InMemoryDocumentStore.clear(n1); InMemoryDocumentStore.clear(n2)
     val df = countsDf(20)
-    DocSink.writeNaive(df, InMemoryDocumentStore.factory(n1), "c")
+    DocSink.writeBatched(df, InMemoryDocumentStore.factory(n1), "c", batchSize = 1)
     DocSink.writeBatched(df, InMemoryDocumentStore.factory(n2), "c", 6)
     assert(InMemoryDocumentStore.storeFor(n1).toMap ==
       InMemoryDocumentStore.storeFor(n2).toMap)
@@ -160,21 +160,21 @@ class DocSinkSpec extends SparkSpec {
   }
 
   test("naive sink: reordered retry under the same job key loses no feed entries") {
-    // per-element keys carry the same content term as batched flushes: a
-    // retry whose re-fetched partition iterates in a different order has
-    // DIFFERENT docs at each ordinal — they must publish, not be
-    // suppressed by the prior attempt's ordinal markers
+    // the naive sink is one-doc flushes, whose keys carry the content
+    // term: a retry whose re-fetched partition iterates in a different
+    // order has DIFFERENT docs at each ordinal — they must publish, not
+    // be suppressed by the prior attempt's ordinal markers
     val dir = Files.createTempDirectory("graft-naive-retry").toString
     val f = new FileDocumentStoreFactory(dir)
     val a = Seq(("x", 1L), ("y", 2L)).toDF("docId", "value").coalesce(1)
-    DocSink.writeNaive(a, f, "c", jobKey = Some("nj"))
+    DocSink.writeBatched(a, f, "c", batchSize = 1, jobKey = Some("nj"))
     val n1 = feedEntries(dir).size
-    DocSink.writeNaive(a, f, "c", jobKey = Some("nj")) // identical replay
+    DocSink.writeBatched(a, f, "c", batchSize = 1, jobKey = Some("nj")) // identical replay
     assert(feedEntries(dir).size == n1, "identical naive replay must be suppressed")
     // reordered "retry": same key, same docs, reversed order — ordinal
-    // e0 now holds y; its feed entry must not be lost
+    // f0 now holds y; its feed entry must not be lost
     val rev = Seq(("y", 2L), ("x", 1L)).toDF("docId", "value").coalesce(1)
-    DocSink.writeNaive(rev, f, "c", jobKey = Some("nj"))
+    DocSink.writeBatched(rev, f, "c", batchSize = 1, jobKey = Some("nj"))
     val last = graft.sink.DocStoreChangelog.latestComplete(dir)
     val fed = graft.sink.DocStoreChangelog.entries(dir, -1L, last)
       .map { case (_, id, n) => id -> n }.toSet

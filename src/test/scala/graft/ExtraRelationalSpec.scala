@@ -554,22 +554,33 @@ class ExtraRelationalSpec extends SparkSpec {
   }
 
   test("q75_hier_rollup: planted 7-node binary tree rolls up exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hier").toString
-    // part keys 0..6 -> 1-based nodes 1..7; price = node id for easy sums
-    (0 to 6).map(k => (k.toLong, s"part$k", "b", "t", 1, (k + 1).toDouble))
-      .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size",
-        "p_retailprice")
-      .write.mode("overwrite").parquet(s"$dir/part.parquet")
-    val out = ExtraRelationalQueries.queries("q75_hier_rollup")(spark, dir)
-      .as[(Long, Long, Long, Double)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    // node -> (depth, subtree_n, subtree_value); values are the keys
-    assert(out == Map(
-      1L -> ((0L, 7L, 28.0)),           // whole tree: 1+2+...+7
-      2L -> ((1L, 3L, 11.0)),           // {2,4,5}
-      3L -> ((1L, 3L, 16.0)),           // {3,6,7}
-      4L -> ((2L, 1L, 4.0)), 5L -> ((2L, 1L, 5.0)),
-      6L -> ((2L, 1L, 6.0)), 7L -> ((2L, 1L, 7.0))), s"got $out")
+    // part keys 0..6 -> 1-based nodes 1..7; price = node id for easy sums.
+    // Once on int64 keys and once on int32 keys: an int shift masks its
+    // distance to 5 bits, so an unwidened int32 chain re-emits pk1 for
+    // levels >= 32 and the duplicate closure rows inflate every count.
+    val planted = Seq(
+      (0 to 6).map(k => (k.toLong, s"part$k", "b", "t", 1, (k + 1).toDouble))
+        .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size",
+          "p_retailprice"),
+      (0 to 6).map(k => (k.toInt, s"part$k", "b", "t", 1, (k + 1).toDouble))
+        .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size",
+          "p_retailprice"))
+    planted.foreach { part =>
+      val keyType = part.schema("p_partkey").dataType.simpleString
+      val dir = java.nio.file.Files.createTempDirectory("graft-hier").toString
+      part.write.mode("overwrite").parquet(s"$dir/part.parquet")
+      val out = ExtraRelationalQueries.queries("q75_hier_rollup")(spark, dir)
+        .as[(Long, Long, Long, Double)].collect()
+        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+      // node -> (depth, subtree_n, subtree_value); values are the keys
+      assert(out == Map(
+        1L -> ((0L, 7L, 28.0)),           // whole tree: 1+2+...+7
+        2L -> ((1L, 3L, 11.0)),           // {2,4,5}
+        3L -> ((1L, 3L, 16.0)),           // {3,6,7}
+        4L -> ((2L, 1L, 4.0)), 5L -> ((2L, 1L, 5.0)),
+        6L -> ((2L, 1L, 6.0)), 7L -> ((2L, 1L, 7.0))),
+        s"$keyType keys: got $out")
+    }
 
     // fixture invariants: root's subtree is the whole table; depth is
     // floor(log2(node)); every subtree value within the root's

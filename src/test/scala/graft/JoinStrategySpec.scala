@@ -58,8 +58,8 @@ class JoinStrategySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     // round-9 advice item: the two skew remedies must be interchangeable
     // on results — AQE's runtime partition split (preferred default; see
-    // SCALE.md §Skew A/B for the sf1-scale timings from
-    // graft.tools.SkewAB) and q65's static salt (the deterministic plan
+    // SCALE.md §Skew: AQE runtime split vs static salting for the
+    // measured timings) and q65's static salt (the deterministic plan
     // for AQE-less engines/configs). Same skewed input as the
     // mechanism-pinning case above.
     val keys = Seq.fill(40000)(1L) ++ (2L to 2000L)
