@@ -865,8 +865,11 @@ object ExtraRelationalQueries {
     // oracle keeps the recursive-CTE formulation.
     "q75_hier_rollup" -> ((s, d) => {
       // Temp view on a CHILD session (same SparkContext; separate
-      // temp-view catalog) so the shared session's catalog stays clean.
+      // temp-view catalog) so the shared session's catalog stays clean;
+      // on the executors' shared class loader, so a new child session
+      // reuses the code the previous execution compiled.
       val qs = s.newSession()
+      org.apache.spark.sql.GraftBridge.shareExecutorClassLoader(qs)
       Tables.part(qs, d).createOrReplaceTempView("part")
       // nodes are 1-based (pk1 = p_partkey + 1): parent(1) would be
       // undefined for a 0 key, whose chain could never reach the root

@@ -99,15 +99,16 @@ object StreamingJobs {
       Seq(Array(sentinel(1)), Array(sentinel(2)))
     groups.zipWithIndex.foreach { case (g, i) =>
       val tmp = java.nio.file.Files
-        .createTempDirectory("graft-replay-chunk").toString
-      g.toSeq.toDF("event_id", "ts", "user_id", "event_type",
-          "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
+        .createTempDirectory("graft-replay-chunk").toFile
       val dst = new java.io.File(dir, f"chunk_$i%03d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      try {
+        g.toSeq.toDF("event_id", "ts", "user_id", "event_type",
+            "value", "props")
+          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.move(part.toPath, dst.toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
       // strictly increasing, coarse-granularity-proof spacing
       dst.setLastModified(1700000000000L + i * 60000L)
     }
@@ -369,7 +370,19 @@ object StreamingJobs {
     // idempotence meaningful across RESTARTS (a temp checkpoint only
     // covers retries within one run)
     checkpoint.foreach(c => w.option("checkpointLocation", c))
-    LocalCheckpointFileManager.install(spark)
+    prepare(spark)
     w.start()
+  }
+
+  /** Session settings for graft's streaming queries; call it before
+    * `start()`, which snapshots the session's conf into the query's
+    * clone. Selects the fork-free [[LocalCheckpointFileManager]] and
+    * keeps the query on the executors' shared class loader
+    * ([[org.apache.spark.sql.GraftBridge.shareExecutorClassLoader]]), so
+    * a new query reuses the code earlier queries compiled. Each setting
+    * keeps a value the session already holds; idempotent. */
+  def prepare(spark: SparkSession): Unit = {
+    LocalCheckpointFileManager.install(spark)
+    org.apache.spark.sql.GraftBridge.shareExecutorClassLoader(spark)
   }
 }

@@ -30,7 +30,7 @@ object FeedReplicate {
     * `name` so a StreamingQueryListener can sample its progress. */
   def replicate(spark: SparkSession, src: String, dst: String,
       perTrigger: Long = 1L, name: String = "feed_replicate"): Unit = {
-    graft.streaming.LocalCheckpointFileManager.install(spark)
+    graft.streaming.StreamingJobs.prepare(spark)
     val q = spark.readStream.format("graft.sources.DocStoreDataSource")
       .option("path", src)
       .option("maxEntriesPerTrigger", perTrigger.toString)

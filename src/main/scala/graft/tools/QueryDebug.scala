@@ -53,9 +53,21 @@ object QueryDebug {
   private def sfDirArg(args: Array[String], i: Int): String =
     if (args.length > i) args(i) else "/root/testdata/sf0.01"
 
-  /** The executed plan as `explain` and `plans` print it. */
-  private def planText(df: DataFrame): String =
-    df.queryExecution.executedPlan.toString.take(4000)
+  /** The executed plan as `explain` and `plans` print it, cut at 4000
+    * characters. `stable` masks what differs between two runs of the
+    * same plan — expression ids, `plan_id`s and the random suffixes of
+    * graft's temp-directory names (`createTempDirectory`'s decimal one,
+    * the IVF index's `_<pid>_<md5>`) — before the cut, so two dumps of
+    * unchanged plans are byte-identical. */
+  private def planText(df: DataFrame, stable: Boolean = false): String = {
+    val p = df.queryExecution.executedPlan.toString
+    (if (stable) runSpecific.foldLeft(p) { case (t, (re, to)) =>
+      re.replaceAllIn(t, to) } else p).take(4000)
+  }
+  private val runSpecific = Seq(
+    "#\\d+".r -> "#N",
+    "plan_id=\\d+".r -> "plan_id=N",
+    "(/tmp/graft[a-z_-]*?)(?:_[0-9a-f]+_[0-9a-f]{32}|\\d+)".r -> "$1*")
 
   /** explainf <names,comma-sep> <outDir> <suffix> [sfDir]: writes each
     * query's `.explain("formatted")` output to <outDir>/<name>_<suffix>.txt
@@ -277,21 +289,23 @@ object QueryDebug {
     "mm_pipeline_e2e" -> "composed multimodal pipeline over the REAL decode chain (round 15: corpus = text families + planted strict-PNM filmstrips with captions): gate + align screen are narrow projections over the checkpointed corpus; graft_phash genuinely decodes+DCTs conformers map-side; the pair join sees only gated+aligned (doc_id, sig) rows; per-frame hashBand perceptual hashes explode only for final survivors; verdict = three doc_id-keyed left joins",
     "stats_ks_drift" -> "exact KS drift, fully lazy: percentile_approx boundary array broadcast-crossed onto the distinct-value grid (no driver stats job at construction); running CDFs via broadcast bucket offsets + in-bucket windows")
 
-  /** plans <out.md> [sfDir]: writes every pick's executed plan under its
-    * note, then carries over verbatim everything from the hand-annotated
-    * marker on in the existing <out.md> — condensed plan sketches, not
-    * regenerable dumps. */
+  /** plans <out.md> [sfDir]: writes every pick's executed plan, masked
+    * (`planText(_, stable = true)`), under its note, then carries over
+    * verbatim everything from the hand-annotated marker on in the
+    * existing <out.md> — condensed plan sketches, not regenerable dumps. */
   private def plans(spark: SparkSession, args: Array[String]): Unit = {
     val out = Paths.get(args(0))
     val sfDir = sfDirArg(args, 1)
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of representative queries " +
       s"(${Paths.get(sfDir).getFileName}, auto-generated by graft.tools.QueryDebug plans)\n\n")
-    sb.append("Regenerate: `tools/run.sh graft.tools.QueryDebug plans PLANS.md`.\n")
+    sb.append("Regenerate: `tools/run.sh graft.tools.QueryDebug plans PLANS.md`. " +
+      "Expression ids (`#N`), `plan_id`s and temp-directory suffixes (`*`) " +
+      "are masked, so two runs over unchanged plans write the same file.\n")
     picks.foreach { case (name, note) =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name\n\n$note\n\n```\n")
-      sb.append(planText(df))
+      sb.append(planText(df, stable = true))
       sb.append("\n```\n")
     }
     val marker = "<!-- HAND-ANNOTATED BELOW"

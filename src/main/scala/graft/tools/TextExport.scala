@@ -28,16 +28,18 @@ object TextExport {
     spark.sparkContext.setLogLevel("WARN")
     try {
       val tmp = java.nio.file.Files
-        .createTempDirectory("graft-textexport").toString
+        .createTempDirectory("graft-textexport").toFile
       val n = spark.read.parquet(s"$tableDir/documents.parquet")
         .select("text").na.drop()
-      n.coalesce(1).write.mode("overwrite").text(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".txt"))
-        .getOrElse(sys.error(s"no text part written under $tmp"))
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(outFile),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      try {
+        n.coalesce(1).write.mode("overwrite").text(tmp.toString)
+        val part = tmp.listFiles()
+          .find(_.getName.endsWith(".txt"))
+          .getOrElse(sys.error(s"no text part written under $tmp"))
+        java.nio.file.Files.move(part.toPath,
+          java.nio.file.Paths.get(outFile),
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
       println(s"""{"docs": ${n.count()}, "out": "$outFile"}""")
     } finally spark.stop()
   }

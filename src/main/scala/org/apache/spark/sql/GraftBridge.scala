@@ -26,6 +26,37 @@ object GraftBridge {
     spark.asInstanceOf[classic.SparkSession].sessionState.conf
       .getConf(internal.SQLConf.SHUFFLE_PARTITIONS)
 
+  /** Run the session's jobs on the executors' shared class loader
+    * instead of one loader per session. With
+    * `spark.sql.artifact.isolation.enabled` on (Spark 4's default) every
+    * job carries its session's id and each executor builds a class
+    * loader for that session; Spark's codegen cache is keyed by (class
+    * loader, code), so every new session — each streaming query's
+    * clone, each `newSession()` — compiles all of its generated code
+    * again. Sets the conf to false unless the session already holds a
+    * value for it (a user's choice, from a builder, `--conf` or `SET`,
+    * wins) or has session-scoped artifacts, which need their own
+    * loader. A session's artifact manager reads the conf once, when it
+    * is built on first use, so this takes effect for a fresh session
+    * (the conf is set before the manager is looked at) and for every
+    * session cloned afterwards, which gets a manager of its own — each
+    * streaming query's clone, made by `start()`. */
+  def shareExecutorClassLoader(spark: SparkSession): Unit = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val key = internal.SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key
+    if (!s.sessionState.conf.contains(key)) {
+      s.conf.set(key, false)
+      if (sessionArtifactAdded(s)) s.conf.unset(key)
+    }
+  }
+
+  /** `ArtifactManager.sessionArtifactAdded`: Scala-`protected`, a public
+    * method in bytecode, so it is read reflectively. */
+  private def sessionArtifactAdded(s: classic.SparkSession): Boolean =
+    classOf[artifact.ArtifactManager].getMethod("sessionArtifactAdded")
+      .invoke(s.artifactManager)
+      .asInstanceOf[java.util.concurrent.atomic.AtomicBoolean].get()
+
   /** The analyzed logical plan backing a DataFrame. */
   def analyzedPlan(df: Dataset[_]):
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

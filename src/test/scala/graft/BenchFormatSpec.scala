@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * does not grow with the query count (round 6 embedded the ~4 KB
   * per-query map there and the truncated-from-the-front capture lost
   * the parseable head). Pure-function test — no SparkSession. */
-class BenchFormatSpec extends AnyFunSuite {
+class BenchFormatSpec extends AnyFunSuite with TempDirs {
 
   private val manyQueries =
     (1 to 500).map(i => s"q$i" -> i * 0.01).toMap
@@ -139,8 +139,7 @@ class BenchFormatSpec extends AnyFunSuite {
   /** Write a synthetic record and run tools/benchcheck.py over it. */
   private def benchcheck(recordLines: Seq[String]): (Int, String) = {
     assume(python3Available, "python3 not on PATH")
-    val f = java.nio.file.Files
-      .createTempDirectory("graft-benchcheck")
+    val f = tempDir("graft-benchcheck")
       .resolve("BENCH_synthetic.json") // NOT BENCH_LAST: skip git paths
     java.nio.file.Files.writeString(f,
       recordLines.mkString("\n") + "\n")
@@ -232,8 +231,7 @@ class BenchFormatSpec extends AnyFunSuite {
 
   private def checkSf1(recordLines: Seq[String]): (Int, String) = {
     assume(python3Available, "python3 not on PATH")
-    val f = java.nio.file.Files
-      .createTempDirectory("graft-sf1check")
+    val f = tempDir("graft-sf1check")
       .resolve("BENCH_sf1_synthetic.json")
     java.nio.file.Files.writeString(f, recordLines.mkString("\n") + "\n")
     val out = new StringBuilder
@@ -298,8 +296,7 @@ class BenchFormatSpec extends AnyFunSuite {
       postBwMs: Double, bwFloorMs: Double,
       postSpin: Double, spinFloor: Double): (Int, String) = {
     assume(python3Available, "python3 not on PATH")
-    val f = java.nio.file.Files
-      .createTempDirectory("graft-mergecheck")
+    val f = tempDir("graft-mergecheck")
       .resolve("subset.json")
     java.nio.file.Files.writeString(f, recordLines.mkString("\n") + "\n")
     val out = new StringBuilder
@@ -364,8 +361,7 @@ class BenchFormatSpec extends AnyFunSuite {
   private def checkMergeAcceptQuery(recordLines: Seq[String],
       query: String): (Int, String) = {
     assume(python3Available, "python3 not on PATH")
-    val f = java.nio.file.Files
-      .createTempDirectory("graft-mergeqcheck")
+    val f = tempDir("graft-mergeqcheck")
       .resolve("subset.json")
     java.nio.file.Files.writeString(f, recordLines.mkString("\n") + "\n")
     val out = new StringBuilder
@@ -422,8 +418,7 @@ class BenchFormatSpec extends AnyFunSuite {
   test("benchcheck stamps qualified into the artifact and round-trips it") {
     assume(python3Available, "python3 not on PATH")
     def run(recordLines: Seq[String]): (Int, String, java.nio.file.Path) = {
-      val f = java.nio.file.Files
-        .createTempDirectory("graft-stampcheck")
+      val f = tempDir("graft-stampcheck")
         .resolve("BENCH_synthetic.json")
       java.nio.file.Files.writeString(f, recordLines.mkString("\n") + "\n")
       val out = new StringBuilder

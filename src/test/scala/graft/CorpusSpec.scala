@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.security.MessageDigest
 
 import graft.queries.CorpusQueries
@@ -13,7 +12,7 @@ class CorpusSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val plantedDir: String = {
-    val dir = Files.createTempDirectory("graft-corpus").toString
+    val dir = tempDir("graft-corpus").toString
     val chunkA = (1 to 16).map(i => s"tok$i").mkString(" ")
     val chunkB = (17 to 32).map(i => s"tok$i").mkString(" ")
     val chunkC = (1 to 16).map(i => s"other$i").mkString(" ")
@@ -84,7 +83,7 @@ class CorpusSpec extends SparkSpec {
     // run again: the second pass must remove nothing
     for (name <- Seq("dedup_paragraph", "dedup_substr_remove")) {
       val out1 = CorpusQueries.queries(name)(spark, sf0001)
-      val dir2 = Files.createTempDirectory(s"graft-idem-$name").toString
+      val dir2 = tempDir(s"graft-idem-$name").toString
       out1.select(col("doc_id"), col("clean_text").as("text"),
         lit("en").as("lang"), lit("src0").as("source"),
         length(col("clean_text")).cast("long").as("n_chars"))
@@ -302,7 +301,7 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("sketch_kmv_intersect: small-set branch is the exact common count") {
-    val dir = Files.createTempDirectory("graft-kmv").toString
+    val dir = tempDir("graft-kmv").toString
     // sets far below k=256: the sketch is exhaustive, est_n must be the
     // true distinct-shingle intersection (A∩B = {a b c, b c d} -> 2)
     Seq(

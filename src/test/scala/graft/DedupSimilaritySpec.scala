@@ -742,6 +742,42 @@ class DedupSimilaritySpec extends SparkSpec {
       ++ Seq(300L, 301L)).toSet)
   }
 
+  test("connected components: a pair with a null endpoint is no edge, and the fixpoint ends") {
+    import graft.queries.DedupQueries
+    def labels(ps: Seq[(Option[Long], Option[Long])]) =
+      DedupQueries.connectedComponents(ps.toDF("doc_a", "doc_b"))
+        .as[(Long, Long)].collect().toMap
+    val clean = Seq((1L, 2L), (2L, 3L), (10L, 11L))
+      .map { case (a, b) => (Option(a), Option(b)) }
+    val expected = labels(clean)
+    // a null label that counts as changed in every round never
+    // converges: run it with a deadline, on a thread of its own
+    val group = "graft-cc-null-endpoints"
+    @volatile var got: scala.util.Try[Map[Long, Long]] = null
+    val t = new Thread(() => {
+      spark.sparkContext.setJobGroup(group, "cc over null endpoints",
+        interruptOnCancel = true)
+      got = scala.util.Try(labels(clean ++
+        Seq((Some(3L), None), (None, Some(12L)), (None, None))))
+    })
+    t.setDaemon(true)
+    t.start()
+    t.join(90000)
+    if (t.isAlive) {
+      // cancel rounds until the loop fails out of its current job
+      var tries = 0
+      while (t.isAlive && tries < 60) {
+        spark.sparkContext.cancelJobGroup(group)
+        t.join(1000)
+        tries += 1
+      }
+      fail("connectedComponents did not finish within 90 s on pairs " +
+        "with a null endpoint")
+    }
+    assert(got.get == expected)
+    assert(!expected.contains(12L))
+  }
+
   test("rolling fingerprint: equal docs equal, reorder changes, order-sensitive") {
     val df = Seq(
       (1L, "a b c d"), (2L, "a b c d"), (3L, "d c b a"), (4L, "a b c e"))
@@ -1110,7 +1146,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // renditions (ids 16 and 23 trigger the %16 doubling / perturbation
     // families — the brute force below replays the augmentation rules
     // independently, so the in-query planting is pinned too)
-    val dir = java.nio.file.Files.createTempDirectory("graft-phashdct")
+    val dir = tempDir("graft-phashdct")
       .toString
     val docs = Seq((1L, base), (2L, edited), (3L, other), (4L, phase),
       (5L, base), (16L, other), (23L, phase))
@@ -1518,7 +1554,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("dedup_snm: planted sort-adjacent near-dups; fixture pairs within passjoin's exact set") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-snm").toString
+    val dir = tempDir("graft-snm").toString
     val base = "the quick brown fox jumps over dog"
     Seq(
       (1L, base),
@@ -1547,7 +1583,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("dedup_snm: non-ASCII prefixes rank in exact UTF-8 byte order (key never overflows)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-snm-utf8").toString
+    val dir = tempDir("graft-snm-utf8").toString
     // 'á' (U+00E1) leads with UTF-8 bytes C3 A1. A codepoint-based sort
     // key would put 225 in the top byte slot (225·2⁵⁶ > Long.Max) and
     // wrap NEGATIVE, ranking accented docs FIRST; exact byte order ranks
@@ -1612,7 +1648,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("dedup_editdist_passjoin: planted edit types found; equals brute force") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-passjoin").toString
+    val dir = tempDir("graft-passjoin").toString
     // short enough that base and its 3-char-inserted variant BOTH fit
     // inside the 40-char prefix window (else truncation shifts the tail
     // out and the planted distance changes)
@@ -1664,8 +1700,7 @@ class DedupSimilaritySpec extends SparkSpec {
       sb.toString
     }
     for (round <- 1 to 3) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft-pjprop$round").toString
+      val dir = tempDir(s"graft-pjprop$round").toString
       val docs = (0 until 12).flatMap { i =>
         val base = randStr(8 + rnd.nextInt(30)) // spans the tiny-class edge
         val nEdits = rnd.nextInt(5)             // 0..4: includes beyond-K
@@ -1681,7 +1716,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("dedup_containment: a quoted excerpt flags directionally where jaccard is blind") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-contain").toString
+    val dir = tempDir("graft-contain").toString
     val container = "alpha beta gamma delta epsilon zeta eta theta iota " +
       "kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
     val excerpt = "delta epsilon zeta eta theta iota" // every shingle ⊂ container

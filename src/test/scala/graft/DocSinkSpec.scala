@@ -57,7 +57,7 @@ class DocSinkSpec extends SparkSpec {
   }
 
   test("file store: atomic upsert files, readable back") {
-    val dir = Files.createTempDirectory("graft-sink").toString
+    val dir = tempDir("graft-sink").toString
     val f = new FileDocumentStoreFactory(dir)
     val df = Seq(("alpha", 3L), ("beta", 9L)).toDF("docId", "value")
     DocSink.writeBatched(df, f, "col1", 500)
@@ -69,9 +69,9 @@ class DocSinkSpec extends SparkSpec {
   }
 
   test("end-to-end CLI parity: wordcount text file -> file store") {
-    val in = Files.createTempFile("kinglear", ".txt")
+    val in = tempFile("kinglear", ".txt")
     Files.write(in, "hi there\nhi\nhi sue bob\nhi sue\n\nbob hi\n".getBytes)
-    val out = Files.createTempDirectory("graft-cli").toString
+    val out = tempDir("graft-cli").toString
     val o = Options(implementation = "batch", inputFile = in.toString,
       outputDir = out, maxBatchSize = 2)
     val counts = WordCount.countWords(spark.read.textFile(o.inputFile).toDF("value"))
@@ -95,7 +95,7 @@ class DocSinkSpec extends SparkSpec {
     // '.x' must not encode to a dot-file ('.x.json') — readAll/readIds
     // filter dot-files as temp/marker names, so the doc would be durable
     // yet invisible to every batch read. Mid-id dots stay readable.
-    val dir = Files.createTempDirectory("graft-dotid").toString
+    val dir = tempDir("graft-dotid").toString
     val f = new FileDocumentStoreFactory(dir)
     val s = f.open()
     s.commitBatch("dots", Seq(
@@ -111,7 +111,7 @@ class DocSinkSpec extends SparkSpec {
   }
 
   test("file store: field names that would poison the doc JSON are rejected") {
-    val dir = Files.createTempDirectory("graft-field").toString
+    val dir = tempDir("graft-field").toString
     val s = new FileDocumentStoreFactory(dir).open()
     for (bad <- Seq("a\"b", "a:b", "a,b", "{x}", "a\\b", "", "a\nb"))
       intercept[IllegalArgumentException] {
@@ -124,7 +124,7 @@ class DocSinkSpec extends SparkSpec {
   }
 
   test("file store: readIds lists ids from filenames without opening bodies") {
-    val dir = Files.createTempDirectory("graft-ids").toString
+    val dir = tempDir("graft-ids").toString
     val f = new FileDocumentStoreFactory(dir)
     val s = f.open()
     s.commitBatch("raw", Seq(
@@ -138,7 +138,7 @@ class DocSinkSpec extends SparkSpec {
   }
 
   test("change feed: identical flush retry publishes once; changed content under the same key still publishes") {
-    val dir = Files.createTempDirectory("graft-retry").toString
+    val dir = tempDir("graft-retry").toString
     val f = new FileDocumentStoreFactory(dir)
     val df = Seq(("a", 1L), ("b", 2L)).toDF("docId", "value").coalesce(1)
     DocSink.writeBatched(df, f, "c", 500, jobKey = Some("job1"))
@@ -164,7 +164,7 @@ class DocSinkSpec extends SparkSpec {
     // term: a retry whose re-fetched partition iterates in a different
     // order has DIFFERENT docs at each ordinal — they must publish, not
     // be suppressed by the prior attempt's ordinal markers
-    val dir = Files.createTempDirectory("graft-naive-retry").toString
+    val dir = tempDir("graft-naive-retry").toString
     val f = new FileDocumentStoreFactory(dir)
     val a = Seq(("x", 1L), ("y", 2L)).toDF("docId", "value").coalesce(1)
     DocSink.writeBatched(a, f, "c", batchSize = 1, jobKey = Some("nj"))
@@ -186,7 +186,7 @@ class DocSinkSpec extends SparkSpec {
     assert(feedValue(Map("count" -> 3L, "x" -> 9L)) == 3L)
     assert(feedValue(Map("visits" -> 7L)) == 7L)
     assert(feedValue(Map("a" -> 1L, "b" -> 2L)) == 0L)
-    val dir = Files.createTempDirectory("graft-fieldname").toString
+    val dir = tempDir("graft-fieldname").toString
     val f = new FileDocumentStoreFactory(dir)
     val df = Seq(("a", 1L), ("b", 2L)).toDF("docId", "value")
     DocSink.writeBatched(df, f, "v", 500, fieldName = "visits")
@@ -205,7 +205,7 @@ class DocSinkSpec extends SparkSpec {
   }
 
   test("change feed: warm-hint sequence claims stay dense and survive a feed wipe") {
-    val dir = Files.createTempDirectory("graft-seq").toString
+    val dir = tempDir("graft-seq").toString
     val s = new FileDocumentStoreFactory(dir).open()
     for (i <- 1 to 20)
       s.commitBatch("c", Seq(s"d$i" -> Map("count" -> i.toLong)))
@@ -259,7 +259,7 @@ class DocSinkSpec extends SparkSpec {
     // the multi-writer protocol's core claim: create-exclusive claims
     // collide FORWARD, so N racing appenders produce exactly N dense
     // fully-written entries — no overwrites, no holes, no torn bodies
-    val dir = Files.createTempDirectory("graft-mw").toString
+    val dir = tempDir("graft-mw").toString
     val cl = graft.sink.DocStoreChangelog
     val writers = 8
     val perWriter = 25

@@ -11,7 +11,7 @@ class DocStoreSourceSpec extends SparkSpec {
   import spark.implicits._
 
   test("sink -> DSv2 source round-trip equals the original counts") {
-    val root = Files.createTempDirectory("graft-dsv2").toString
+    val root = tempDir("graft-dsv2").toString
     val counts = WordCount.countWords(Tables.documents(spark, sf0001), "text")
     DocSink.writeBatched(counts, new FileDocumentStoreFactory(root), "wc", 10)
     val back = spark.read.format("graft.sources.DocStoreDataSource")
@@ -24,7 +24,7 @@ class DocStoreSourceSpec extends SparkSpec {
   }
 
   test("DSv2 pushdown: collection equality prunes directories, pruned columns skip work") {
-    val root = Files.createTempDirectory("graft-dsv2p").toString
+    val root = tempDir("graft-dsv2p").toString
     for (c <- Seq("alpha", "beta", "gamma")) {
       val store = new FileDocumentStoreFactory(root).open()
       store.commitBatch(c, Seq("d1" -> Map("count" -> 1L),
@@ -54,7 +54,7 @@ class DocStoreSourceSpec extends SparkSpec {
   }
 
   test("DSv2 doc_id pushdown: point lookups probe files, never list or parse the collection") {
-    val root = Files.createTempDirectory("graft-dsv2id").toString
+    val root = tempDir("graft-dsv2id").toString
     val store = new FileDocumentStoreFactory(root).open()
     store.commitBatch("c", Seq("d1" -> Map("count" -> 1L),
       "d2" -> Map("count" -> 2L), "d3" -> Map("count" -> 3L)))
@@ -106,7 +106,7 @@ class DocStoreSourceSpec extends SparkSpec {
     // the physical plan must carry no FilterExec above it — if a future
     // change made the prune partial, Spark would silently re-add the
     // filter and the O(requested ids) claim would quietly stop holding
-    val root = Files.createTempDirectory("graft-planshape").toString
+    val root = tempDir("graft-planshape").toString
     val store = new FileDocumentStoreFactory(root).open()
     store.commitBatch("c", Seq("d1" -> Map("count" -> 1L)))
     store.close()
@@ -124,7 +124,7 @@ class DocStoreSourceSpec extends SparkSpec {
   }
 
   test("DSv2 intra-collection split: a big collection fans out across id-slice partitions") {
-    val root = Files.createTempDirectory("graft-split").toString
+    val root = tempDir("graft-split").toString
     val store = new FileDocumentStoreFactory(root).open()
     store.commitBatch("big",
       (1 to 25).map(i => f"d$i%03d" -> Map("count" -> i.toLong)))
@@ -164,7 +164,7 @@ class DocStoreSourceSpec extends SparkSpec {
   }
 
   test("DSv2 runtime filtering: join-time collection/doc_id filters narrow the scan like pushdown") {
-    val root = Files.createTempDirectory("graft-rtf").toString
+    val root = tempDir("graft-rtf").toString
     val store = new FileDocumentStoreFactory(root).open()
     for (c <- Seq("alpha", "beta"))
       store.commitBatch(c, Seq("d1" -> Map("count" -> 1L),
@@ -201,7 +201,7 @@ class DocStoreSourceSpec extends SparkSpec {
   }
 
   test("streaming change feed honors doc_id pushdown (reader-enforced rows filter)") {
-    val root = Files.createTempDirectory("graft-feedid").toString
+    val root = tempDir("graft-feedid").toString
     val store = new FileDocumentStoreFactory(root).open()
     store.commitBatch("c", Seq("a" -> Map("count" -> 1L),
       "b" -> Map("count" -> 2L)))
@@ -220,7 +220,7 @@ class DocStoreSourceSpec extends SparkSpec {
   }
 
   test("DSv2 write -> read round-trip; append is idempotent upsert") {
-    val root = Files.createTempDirectory("graft-dsv2w").toString
+    val root = tempDir("graft-dsv2w").toString
     val counts = WordCount.countWords(Tables.documents(spark, sf0001), "text")
       .select(lit("wc2").as("collection"), col("word").as("doc_id"),
         col("cnt").cast("long").as("count"))
@@ -241,7 +241,7 @@ class DocStoreSourceSpec extends SparkSpec {
   }
 
   test("DSv2 write rejects a wrong schema") {
-    val root = Files.createTempDirectory("graft-dsv2x").toString
+    val root = tempDir("graft-dsv2x").toString
     val bad = Seq((1, 2)).toDF("a", "b")
     // Spark's DSv2 analyzer checks the declared table schema first
     // (INCOMPATIBLE_DATA_FOR_TABLE); the WriteBuilder's own require is the
@@ -260,7 +260,7 @@ class DocStoreSourceSpec extends SparkSpec {
     // of DocSink — complete-mode batches are idempotent upserts, so the
     // store converges to the batch answer through either sink surface
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = Files.createTempDirectory("graft-dsv2s").toString
+    val root = tempDir("graft-dsv2s").toString
     val stream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[String]
     val counts = WordCount.countWords(stream.toDS().toDF("text"), "text")
@@ -291,8 +291,8 @@ class DocStoreSourceSpec extends SparkSpec {
     // clean run produces. This test fails if the sink ever double-applies
     // (duplicate doc rows) or diverges (wrong counts after replay).
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = Files.createTempDirectory("graft-dsv2eo").toString
-    val ckpt = Files.createTempDirectory("graft-dsv2eo-ckpt").toString
+    val root = tempDir("graft-dsv2eo").toString
+    val ckpt = tempDir("graft-dsv2eo-ckpt").toString
     val stream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[String]
     val counts = WordCount.countWords(stream.toDS().toDF("text"), "text")
@@ -337,8 +337,8 @@ class DocStoreSourceSpec extends SparkSpec {
   }
 
   test("streaming change feed: every committed upsert replays exactly once") {
-    val root = Files.createTempDirectory("graft-dsv2cf").toString
-    val ckpt = Files.createTempDirectory("graft-dsv2cf-ckpt").toString
+    val root = tempDir("graft-dsv2cf").toString
+    val ckpt = tempDir("graft-dsv2cf-ckpt").toString
     val store = new FileDocumentStoreFactory(root).open()
     store.commitBatch("c1", Seq("a" -> Map("count" -> 1L), "b" -> Map("count" -> 2L)))
     store.commitBatch("c2", Seq("x" -> Map("count" -> 9L)))
@@ -378,7 +378,7 @@ class DocStoreSourceSpec extends SparkSpec {
   }
 
   test("streaming change feed honors collection filters and pruned columns") {
-    val root = Files.createTempDirectory("graft-dsv2cff").toString
+    val root = tempDir("graft-dsv2cff").toString
     val store = new FileDocumentStoreFactory(root).open()
     store.commitBatch("keep", Seq("k" -> Map("count" -> 1L)))
     store.commitBatch("drop", Seq("d" -> Map("count" -> 2L)))
@@ -393,9 +393,9 @@ class DocStoreSourceSpec extends SparkSpec {
   }
 
   test("change-feed replication: store A streams into store B and converges") {
-    val rootA = Files.createTempDirectory("graft-repl-a").toString
-    val rootB = Files.createTempDirectory("graft-repl-b").toString
-    val ckpt = Files.createTempDirectory("graft-repl-ckpt").toString
+    val rootA = tempDir("graft-repl-a").toString
+    val rootB = tempDir("graft-repl-b").toString
+    val ckpt = tempDir("graft-repl-ckpt").toString
     val storeA = new FileDocumentStoreFactory(rootA).open()
     // two commits UPSERT the same doc — replication is only correct if
     // the feed applies in commit order (maxEntriesPerTrigger=1: one
@@ -427,8 +427,8 @@ class DocStoreSourceSpec extends SparkSpec {
 
   test("CDC change compaction: no-op upserts suppressed, stream == batch twin per key and in order") {
     import graft.streaming.StreamingJobs
-    val root = Files.createTempDirectory("graft-cdc-compact").toString
-    val ckpt = Files.createTempDirectory("graft-cdc-ckpt").toString
+    val root = tempDir("graft-cdc-compact").toString
+    val ckpt = tempDir("graft-cdc-ckpt").toString
     val store = new FileDocumentStoreFactory(root).open()
     // a re-run pipeline re-upserting mostly-unchanged state: doc a
     // changes 1→1(noop)→5, doc b stays 2 throughout (all noop after the
@@ -480,7 +480,7 @@ class DocStoreSourceSpec extends SparkSpec {
     // re-evaluated by Spark; the streaming allowlist must intersect them
     // exactly like the batch directory prune (a union would leak rows of
     // collection 'a' through isin("a","b") && === "b")
-    val root = Files.createTempDirectory("graft-dsv2conj").toString
+    val root = tempDir("graft-dsv2conj").toString
     val store = new FileDocumentStoreFactory(root).open()
     store.commitBatch("a", Seq("da" -> Map("count" -> 1L)))
     store.commitBatch("b", Seq("db" -> Map("count" -> 2L)))
@@ -503,7 +503,7 @@ class DocStoreSourceSpec extends SparkSpec {
     // speculative duplicate: same queryId + partitionId, DIFFERENT taskId,
     // same rows in the same order. Documents re-upsert (idempotent); the
     // feed must carry each flush exactly once.
-    val root = Files.createTempDirectory("graft-dsv2retry").toString
+    val root = tempDir("graft-dsv2retry").toString
     val f = graft.sources.DocStoreWriterFactory(root, 2, "query-retry-test")
     def attempt(taskId: Long): Unit = {
       val w = f.createWriter(0, taskId)
@@ -539,7 +539,7 @@ class DocStoreSourceSpec extends SparkSpec {
   }
 
   test("DSv2 source parallelizes by collection and supports SQL") {
-    val root = Files.createTempDirectory("graft-dsv2b").toString
+    val root = tempDir("graft-dsv2b").toString
     val f = new FileDocumentStoreFactory(root)
     DocSink.writeBatched(Seq(("a", 1L), ("b", 2L)).toDF("d", "v"), f, "c1", 10)
     DocSink.writeBatched(Seq(("x", 9L)).toDF("d", "v"), f, "c2", 10)

@@ -110,7 +110,7 @@ class ExtraRelationalSpec extends SparkSpec {
   }
 
   test("q60_sessionize: planted gaps split sessions exactly at the 30-min rule") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess").toString
+    val dir = tempDir("graft-sess").toString
     val m = 60L * 1000000000L // one minute in NANOS (Tables.events divides)
     // user 1: events at 0, 29, 60, 120 min -> gaps 29/31/60 -> sessions
     // {0,29}, {60}, {120}; user 2: single event -> one session
@@ -138,7 +138,7 @@ class ExtraRelationalSpec extends SparkSpec {
     // 30-min horizon and exactly AT the purchase instant are both
     // attributed; one microsecond outside either end is not. Integer
     // micros arithmetic — no FP tie hazard.
-    val dir = java.nio.file.Files.createTempDirectory("graft-attrib").toString
+    val dir = tempDir("graft-attrib").toString
     val pUs = 6000000000L // purchase at 100 min
     val hUs = 1800000000L // 30-min horizon
     Seq(
@@ -186,7 +186,7 @@ class ExtraRelationalSpec extends SparkSpec {
     // planted SCD2 timeline for user 1 (micros): click-run from 1000,
     // view-run from 3000, click-run from 5000 -> versions
     // [1000,3000) click, [3000,5000) view, [5000,inf) click
-    val dir = java.nio.file.Files.createTempDirectory("graft-pit").toString
+    val dir = tempDir("graft-pit").toString
     Seq(
       (1L, 1000L * 1000L, 1L, "click", 1.0, "{}"),
       (2L, 2000L * 1000L, 1L, "click", 1.0, "{}"),
@@ -334,7 +334,7 @@ class ExtraRelationalSpec extends SparkSpec {
     // (the long-layout branch of Tables.events). One type, one day.
     def ev(id: Long, startMin: Long, durMin: Long, typ: String) =
       (id, startMin * 60L * 1000000000L, 1L, typ, (durMin - 1).toDouble, "{}")
-    val dir = java.nio.file.Files.createTempDirectory("graft-conc").toString
+    val dir = tempDir("graft-conc").toString
     Seq(
       ev(1, 0, 10, "call"),   // [0,10)
       ev(2, 5, 10, "call"),   // [5,15)  overlaps 1
@@ -361,7 +361,7 @@ class ExtraRelationalSpec extends SparkSpec {
   }
 
   test("q77_event_pattern: planted sessions match the right patterns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cep").toString
+    val dir = tempDir("graft-cep").toString
     val m = 60L * 1000000000L // 1 min in nanos
     Seq(
       // user 1, one session: view->error->click->purchase (funnel, not
@@ -401,7 +401,7 @@ class ExtraRelationalSpec extends SparkSpec {
   }
 
   test("q81_gap_fill: planted LOCF exact; fixture replays bit-for-bit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-locf").toString
+    val dir = tempDir("graft-locf").toString
     val h = 3600L * 1000000000L // 1 h in nanos
     // user 1: two same-ts events in hour 0 (event_id tie-break picks
     // v=2.0), a gap at hour 1, an observation at hour 2; user 2: one
@@ -452,7 +452,7 @@ class ExtraRelationalSpec extends SparkSpec {
   }
 
   test("q78_skyline: planted frontier exact; fixture matches brute-force dominance") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sky").toString
+    val dir = tempDir("graft-sky").toString
     Seq((1L, 10.00, 5), (2L, 10.00, 5), (3L, 10.00, 4), (4L, 20.00, 7),
       (5L, 20.00, 7), (6L, 30.00, 6), (7L, 5.00, 1))
       .map { case (k, pr, sz) => (k, s"part$k", "B", "T", sz, pr) }
@@ -484,7 +484,7 @@ class ExtraRelationalSpec extends SparkSpec {
   }
 
   test("q80_tag_join: planted exposure counts; plan is hash-join + explode, no BNLJ") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tag").toString
+    val dir = tempDir("graft-tag").toString
     // brands A (watched, size 50), B (watched), C (unwatched)
     Seq((1L, "Brand#A", 50), (2L, "Brand#B", 50), (3L, "Brand#C", 10),
       (4L, "Brand#A", 10)) // second A part, not size 50 — A still watched
@@ -520,7 +520,7 @@ class ExtraRelationalSpec extends SparkSpec {
   test("q76_interval_coverage: union length merges overlaps, gross does not") {
     def ev(id: Long, startMin: Long, durMin: Long, typ: String) =
       (id, startMin * 60L * 1000000000L, 1L, typ, (durMin - 1).toDouble, "{}")
-    val dir = java.nio.file.Files.createTempDirectory("graft-cov").toString
+    val dir = tempDir("graft-cov").toString
     Seq(
       ev(1, 0, 10, "call"),   // [0,10)
       ev(2, 5, 10, "call"),   // [5,15)  overlap merges
@@ -567,7 +567,7 @@ class ExtraRelationalSpec extends SparkSpec {
           "p_retailprice"))
     planted.foreach { part =>
       val keyType = part.schema("p_partkey").dataType.simpleString
-      val dir = java.nio.file.Files.createTempDirectory("graft-hier").toString
+      val dir = tempDir("graft-hier").toString
       part.write.mode("overwrite").parquet(s"$dir/part.parquet")
       val out = ExtraRelationalQueries.queries("q75_hier_rollup")(spark, dir)
         .as[(Long, Long, Long, Double)].collect()
@@ -594,6 +594,17 @@ class ExtraRelationalSpec extends SparkSpec {
         s"node $node depth $depth")
       assert(sn >= 1 && sn <= n)
     }
+  }
+
+  test("q75_hier_rollup: later executions reuse the generated code of the first") {
+    // every execution builds its own child session; on the executors'
+    // shared class loader its generated classes hit the codegen cache
+    val runs = (1 to 3).map(_ => codegenCompilations(
+      ExtraRelationalQueries.queries("q75_hier_rollup")(spark, sf0001)
+        .as[(Long, Long, Long, Double)].collect().sorted.toSeq))
+    assert(runs.map(_._1).distinct.size == 1 && runs.head._1.nonEmpty)
+    assert(runs.tail.map(_._2) == Seq(0L, 0L),
+      s"compilations per execution: ${runs.map(_._2)}")
   }
 
   test("q75_hier_rollup: recursion-limit overrides never touch the shared session") {

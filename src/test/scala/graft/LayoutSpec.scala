@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions._
 class LayoutSpec extends SparkSpec {
 
   test("partitioned write: a partition-column filter prunes directories at listing time") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-layout-part").toString
+    val dir = tempDir("graft-layout-part").toString
     Layout.writePartitioned(
       Tables.orders(spark, sf0001)
         .select(col("o_orderkey"), col("o_totalprice"),
@@ -43,8 +42,7 @@ class LayoutSpec extends SparkSpec {
 
   test("z-ordered write: per-file zkey ranges are disjoint and both dims are clustered") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-layout-z").toString
+    val dir = tempDir("graft-layout-z").toString
     // a full 256×256 grid: both dimensions use comparable bit widths, so
     // the interleave actually alternates — the regime z-ordering is FOR.
     // (With wildly unequal ranges, e.g. 8-bit custkey vs 14-bit dates,
@@ -90,10 +88,8 @@ class LayoutSpec extends SparkSpec {
     val grid = (0 until 65536).map(i => (i.toLong % 256, i.toLong / 256))
       .toDF("x", "y")
     def zkey = ExtraRelationalQueries.zOrderKey(col("x"), col("y"))
-    val zdir = java.nio.file.Files
-      .createTempDirectory("graft-zskip").toString
-    val xdir = java.nio.file.Files
-      .createTempDirectory("graft-xskip").toString
+    val zdir = tempDir("graft-zskip").toString
+    val xdir = tempDir("graft-xskip").toString
     Layout.writeZOrdered(grid, zdir, files = 16, zkey)
     // the SAME writer clustering on one dimension only — the layout
     // z-ordering competes against

@@ -26,11 +26,10 @@ class GraftMockFs(uri: URI, conf: Configuration) extends DelegateToFileSystem(
 
 /** The contract of graft's fork-free checkpoint file manager. Each case
   * fails against a manager that lacks the property it names. */
-class LocalCheckpointFileManagerSpec extends AnyFunSuite {
+class LocalCheckpointFileManagerSpec extends AnyFunSuite with TempDirs {
 
   private val conf = new Configuration()
 
-  private def tempDir() = Files.createTempDirectory("graft-ckfm")
   private def manager(dir: java.nio.file.Path) =
     new LocalCheckpointFileManager(new Path(dir.toUri), conf)
   private def sparkManager(dir: java.nio.file.Path) =
@@ -53,7 +52,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     Files.list(dir).iterator.asScala.map(_.getFileName.toString).toSet
 
   test("a no-overwrite publish onto an existing file fails and keeps the old bytes") {
-    val dir = tempDir()
+    val dir = tempDir("graft-ckfm")
     val m = manager(dir)
     val p = fileIn(dir, "0")
     publish(m, p, "old", overwrite = false)
@@ -65,7 +64,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("an overwrite replaces the file atomically, checksum included") {
-    val dir = tempDir()
+    val dir = tempDir("graft-ckfm")
     val m = manager(dir)
     val p = fileIn(dir, "1.delta")
     publish(m, p, "old", overwrite = true)
@@ -84,7 +83,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("cancel() leaves neither the temp file nor its .crc") {
-    val dir = tempDir()
+    val dir = tempDir("graft-ckfm")
     val m = manager(dir)
     val out = m.createAtomic(fileIn(dir, "0"), overwriteIfPossible = false)
     out.write("partial".getBytes(UTF_8))
@@ -93,7 +92,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("one flipped byte makes open fail with ChecksumException") {
-    val dir = tempDir()
+    val dir = tempDir("graft-ckfm")
     val m = manager(dir)
     val p = fileIn(dir, "0")
     publish(m, p, "0123456789" * 200, overwrite = false)
@@ -108,7 +107,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("file: and local scheme-less paths are served without Spark's manager") {
-    val dir = tempDir()
+    val dir = tempDir("graft-ckfm")
     assert(manager(dir).underlying.isInstanceOf[NioCheckpointFileManager])
     val schemeless = new LocalCheckpointFileManager(new Path(dir.toString), conf)
     assert(schemeless.underlying.isInstanceOf[NioCheckpointFileManager])
@@ -118,7 +117,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   test("a non-file: path is delegated to Spark's manager") {
     val mock = new Configuration()
     mock.set("fs.AbstractFileSystem.graftmock.impl", classOf[GraftMockFs].getName)
-    val dir = tempDir()
+    val dir = tempDir("graft-ckfm")
     val m = new LocalCheckpointFileManager(new Path(s"graftmock:$dir"), mock)
     assert(m.underlying.isInstanceOf[FileContextBasedCheckpointFileManager])
     assert(!m.isLocal)
@@ -131,7 +130,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("list, exists, mkdirs, delete and open on missing paths behave as Spark's default") {
-    val dir = tempDir()
+    val dir = tempDir("graft-ckfm")
     def outcomes(m: CheckpointFileManager, root: Path): Seq[String] = {
       def o(f: => Any): String = Try(f) match {
         case Success(s: Array[FileStatus]) => s.map(_.getPath.getName).sorted.mkString(",")
@@ -157,7 +156,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("files, .crc sidecars and directories get the modes Spark's default gives them") {
-    val dir = tempDir()
+    val dir = tempDir("graft-ckfm")
     def modes(m: CheckpointFileManager, sub: String): Seq[String] = {
       m.mkdirs(fileIn(dir, s"$sub/d"))
       publish(m, fileIn(dir, s"$sub/d/0"), "x", overwrite = false)
@@ -168,7 +167,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("the published layout matches Spark's default, name for name") {
-    val dir = tempDir()
+    val dir = tempDir("graft-ckfm")
     def layout(m: CheckpointFileManager, sub: String): Set[String] = {
       m.mkdirs(fileIn(dir, sub))
       publish(m, fileIn(dir, s"$sub/0"), "a", overwrite = false)

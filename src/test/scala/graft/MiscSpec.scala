@@ -120,7 +120,7 @@ class MiscSpec extends SparkSpec {
   }
 
   test("q79_apriori: planted baskets mine exactly; fixture obeys downward closure") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-apriori").toString
+    val dir = tempDir("graft-apriori").toString
     // 4 baskets over 3 brands; with nb=4 the 0.1% relative threshold
     // admits sup>=1, so the full hand-computed lattice must appear
     Seq((1L, "Brand#A"), (2L, "Brand#B"), (3L, "Brand#C"))
@@ -162,7 +162,7 @@ class MiscSpec extends SparkSpec {
   }
 
   test("dq_constraints: planted violations counted exactly; fixture RI holds") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dq").toString
+    val dir = tempDir("graft-dq").toString
     Seq((1L, "c1")).toDF("c_custkey", "c_name")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     // custkey 9 dangles; duplicate orderkey 100; null orderdate; bad
@@ -255,7 +255,7 @@ class MiscSpec extends SparkSpec {
   }
 
   test("graph_linkpred: planted scores exact; hub guard fires; fixture replays") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lp").toString
+    val dir = tempDir("graft-lp").toString
     // path 1-2-3 plus 1-4-3: non-edges (1,3) cn=2 via centers {2,4} and
     // (2,4) cn=2 via {1,3}; all degrees 2 -> jac = 2/(2+2-2) = 10000.
     // Hub: center 90 with 70 spokes (deg 70 > 64) — spoke pairs get NO
@@ -310,7 +310,7 @@ class MiscSpec extends SparkSpec {
   }
 
   test("stats_ks_drift: planted D exact; fixture matches BigInt brute force") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ks").toString
+    val dir = tempDir("graft-ks").toString
     val m = 60L * 1000000000L // 1 min in nanos
     // view = {1,2,3,4}; click = {3,4,5,6} -> D = 1/2; signup = view -> D = 0
     val rows = Seq(1.0, 2.0, 3.0, 4.0).map(("view", _)) ++
@@ -357,7 +357,7 @@ class MiscSpec extends SparkSpec {
     // OBSERVED values; unfiltered nulls would diverge cross-engine:
     // Spark windows order NULLS FIRST, DuckDB NULLS LAST, and nulls
     // never match the grid's full-outer equi keys)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ksnull").toString
+    val dir = tempDir("graft-ksnull").toString
     val m = 60L * 1000000000L
     val rows: Seq[(String, Option[Double])] =
       Seq(1.0, 2.0, 3.0, 4.0).map(v => ("view", Option(v))) ++
@@ -413,7 +413,7 @@ class MiscSpec extends SparkSpec {
   }
 
   test("graph_triangles: planted triangle found once; matches a brute-force Scala count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tri").toString
+    val dir = tempDir("graft-tri").toString
     // order 1 buys parts {1,2,3} -> triangle; order 2 repeats edge (1,2);
     // order 3 adds the dangling edge (3,4)
     Seq((1L, 1L), (1L, 2L), (1L, 3L), (2L, 1L), (2L, 2L), (3L, 3L), (3L, 4L))

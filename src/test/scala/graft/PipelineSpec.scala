@@ -83,7 +83,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sample_balanced: planted classes equalized to n_min by exact md5 rank") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bal").toString
+    val dir = tempDir("graft-bal").toString
     // A: 2 docs, B: 3, C: 5 -> n_min = 2, every class keeps exactly 2
     val rows = (1L to 2L).map((_, "A")) ++ (3L to 5L).map((_, "B")) ++
       (6L to 10L).map((_, "C"))

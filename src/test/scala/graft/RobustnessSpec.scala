@@ -12,7 +12,7 @@ class RobustnessSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val advDir: String = {
-    val dir = Files.createTempDirectory("graft-adv").toString
+    val dir = tempDir("graft-adv").toString
     Seq(
       (1L, "", "en", "src0", 0L),
       (2L, "   ", "en", "src0", 3L),
@@ -79,7 +79,7 @@ class RobustnessSpec extends SparkSpec {
   }
 
   private lazy val advEventsDir: String = {
-    val dir = Files.createTempDirectory("graft-adv-ev").toString
+    val dir = tempDir("graft-adv-ev").toString
     val m = 60L * 1000000000L // minutes in NANOS (Tables.events divides)
     Seq(
       // nulls in every nullable column; a lone user; same-instant ties
@@ -108,7 +108,7 @@ class RobustnessSpec extends SparkSpec {
   }
 
   private lazy val emptyDir: String = {
-    val dir = Files.createTempDirectory("graft-empty").toString
+    val dir = tempDir("graft-empty").toString
     // the fixture's events.ts is TIMESTAMP(NANOS) — only readable with
     // the legacy long mapping (same conf Tables.events sets); the empty
     // copy then carries plain INT64, which Tables.events handles too.
@@ -187,7 +187,7 @@ class RobustnessSpec extends SparkSpec {
     // the SPI is generic: ids are DATA, not identifiers. An id containing
     // JSON-special or filesystem-special characters must survive the
     // store write, the feed append, and a DSv2 streaming replay intact.
-    val root = Files.createTempDirectory("graft-hostile").toString
+    val root = tempDir("graft-hostile").toString
     val ids = Seq("plain", "has\"quote", "line\nbreak", "back\\slash",
       "tab\tchar", "słowo-ünïcode", "path/../traversal", "{\"json\": 1}")
     val docs = ids.zipWithIndex.map { case (id, i) =>
@@ -214,7 +214,7 @@ class RobustnessSpec extends SparkSpec {
   }
 
   test("empty commitBatch publishes no feed entry and never stalls the feed") {
-    val root = Files.createTempDirectory("graft-emptyb").toString
+    val root = tempDir("graft-emptyb").toString
     val store = new FileDocumentStoreFactory(root).open()
     store.commitBatch("c", Seq.empty)
     assert(DocStoreChangelog.latestComplete(root) == -1L)
@@ -227,7 +227,7 @@ class RobustnessSpec extends SparkSpec {
   }
 
   test("keyed commits publish at most one feed entry per logical batch") {
-    val root = Files.createTempDirectory("graft-keyed").toString
+    val root = tempDir("graft-keyed").toString
     val store = new FileDocumentStoreFactory(root).open()
     store.commitBatchKeyed("job1/p0/f0", "c", Seq("a" -> Map("count" -> 1L)))
     // a task retry / speculative duplicate replays the same key: the doc
@@ -244,7 +244,7 @@ class RobustnessSpec extends SparkSpec {
   }
 
   test("abandoned zero-length claim is reclaimed after staleClaimMs") {
-    val root = Files.createTempDirectory("graft-stale").toString
+    val root = tempDir("graft-stale").toString
     val store = new FileDocumentStoreFactory(root).open()
     store.commitBatch("c", Seq("a" -> Map("count" -> 1L)))
     // simulate a writer that claimed seq 1 and crashed before the rename
@@ -263,7 +263,7 @@ class RobustnessSpec extends SparkSpec {
   }
 
   test("invalid collection names are rejected at write time") {
-    val root = Files.createTempDirectory("graft-badcoll").toString
+    val root = tempDir("graft-badcoll").toString
     val store = new FileDocumentStoreFactory(root).open()
     for (bad <- Seq("has/slash", "_changelog", ".hidden", "", "new\nline"))
       intercept[IllegalArgumentException] {
@@ -280,7 +280,7 @@ class RobustnessSpec extends SparkSpec {
   // intervals), and all-dominated / all-identical skyline inputs.
 
   private lazy val degenDir: String = {
-    val dir = Files.createTempDirectory("graft-degen").toString
+    val dir = tempDir("graft-degen").toString
     val m = 60L * 1000000000L // minutes in nanos
     // events: every value identical (KS zero variance -> D = 0); every
     // ts identical within a type (sweep intervals all zero-length ties)
@@ -315,7 +315,7 @@ class RobustnessSpec extends SparkSpec {
       .as[(String, Long, Long, Long)].collect()
     assert(out.toSeq == Seq(("click", 4L, 4L, 0L)), s"got ${out.toSeq}")
     // reference type only: the grid has nothing to compare against
-    val dir = Files.createTempDirectory("graft-ks1t").toString
+    val dir = tempDir("graft-ks1t").toString
     val m = 60L * 1000000000L
     (0 until 4).map(i => (i.toLong, i * m, 1L, "view", i.toDouble, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -340,7 +340,7 @@ class RobustnessSpec extends SparkSpec {
 
   test("q78_skyline: all-identical points all survive; one dominator leaves one row") {
     assert(SparkEntry.queries("q78_skyline")(spark, degenDir).count() == 3)
-    val dir = Files.createTempDirectory("graft-skydom").toString
+    val dir = tempDir("graft-skydom").toString
     // part 0 is strictly cheaper AND larger than every other part
     ((0L, "p0", "b", "t", 100, 1.0) +: (1 to 5).map(k =>
       (k.toLong, s"p$k", "b", "t", k, 100.0 + k)))
@@ -412,8 +412,7 @@ class RobustnessSpec extends SparkSpec {
     // collision by design), then observe which physical shape each mode
     // picks via the salted path's marker column.
     import graft.queries.DedupQueries
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-memo").toString
+    val dir = tempDir("graft-memo").toString
     def write(rows: Seq[(Long, Long)]): Unit =
       rows.toDF("doc_id", "sig").repartition(2)
         .write.mode("overwrite").parquet(dir)

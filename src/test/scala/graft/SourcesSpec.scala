@@ -11,7 +11,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   test("text source: one row per line (reference O1)") {
-    val f = Files.createTempFile("lines", ".txt")
+    val f = tempFile("lines", ".txt")
     Files.write(f, "a b\n\nc\n".getBytes)
     val ds = spark.read.textFile(f.toString)
     assert(ds.count() == 3)
@@ -19,7 +19,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("csv round-trip with header + schema inference") {
-    val dir = Files.createTempDirectory("csv").toString
+    val dir = tempDir("csv").toString
     val df = Tables.nation(spark, sf0001)
     df.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.option("header", "true")
@@ -29,7 +29,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("json lines round-trip preserves values") {
-    val dir = Files.createTempDirectory("json").toString
+    val dir = tempDir("json").toString
     val df = Tables.region(spark, sf0001)
     df.write.mode("overwrite").json(dir)
     val back = spark.read.json(dir)
@@ -39,7 +39,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("schema evolution: mergeSchema unions parquet footers, old files read nulls") {
-    val dir = Files.createTempDirectory("evolve").toString
+    val dir = tempDir("evolve").toString
     Seq((1L, "a")).toDF("id", "v")
       .write.parquet(s"$dir/part=old")
     Seq((2L, "b", 9.5)).toDF("id", "v", "score")
@@ -53,7 +53,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("malformed JSON ingestion: PERMISSIVE captures corrupt records, FAILFAST aborts") {
-    val f = Files.createTempFile("broken", ".json")
+    val f = tempFile("broken", ".json")
     Files.write(f,
       "{\"id\": 1, \"v\": \"ok\"}\nTHIS IS NOT JSON\n{\"id\": 2, \"v\": \"fine\"}\n"
         .getBytes)
@@ -91,7 +91,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("writer sizing: maxRecordsPerFile bounds output files (the small/large-file knob)") {
-    val dir = Files.createTempDirectory("sized").toString
+    val dir = tempDir("sized").toString
     val df = Tables.customer(spark, sf0001) // 150 rows at sf0.001
     df.repartition(1).write.mode("overwrite")
       .option("maxRecordsPerFile", 40).parquet(dir)
@@ -105,7 +105,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("orc round-trip is exact and prunes with pushed filters") {
-    val dir = Files.createTempDirectory("orc").toString
+    val dir = tempDir("orc").toString
     val df = Tables.customer(spark, sf0001)
     df.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
@@ -119,7 +119,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("parquet write/read round-trip is exact") {
-    val dir = Files.createTempDirectory("pq").toString
+    val dir = tempDir("pq").toString
     val df = Tables.customer(spark, sf0001)
     df.write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
@@ -127,7 +127,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("orc write/read round-trip is exact and pushes filters") {
-    val dir = Files.createTempDirectory("orc").toString
+    val dir = tempDir("orc").toString
     val df = Tables.customer(spark, sf0001)
     df.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
@@ -199,7 +199,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("partitioned parquet write enables partition pruning") {
-    val dir = Files.createTempDirectory("pqpart").toString
+    val dir = tempDir("pqpart").toString
     Tables.orders(spark, sf0001)
       .withColumn("status", col("o_orderstatus"))
       .write.mode("overwrite").partitionBy("status").parquet(dir)

@@ -27,7 +27,7 @@ class StreamingCheckpointSpec extends SparkSpec {
   }
 
   private def inputDir(files: (String, String)*): Path = {
-    val dir = Files.createTempDirectory("graft-ckpt-in")
+    val dir = tempDir("graft-ckpt-in")
     addInput(dir, files: _*)
     dir
   }
@@ -45,7 +45,7 @@ class StreamingCheckpointSpec extends SparkSpec {
     try q.processAllAvailable() finally q.stop()
     factory.readAll("wc")
   }
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String) = tempDir(prefix).toString
 
   private val A = "a.txt" -> "hi there\nhi\nhi sue bob\n"
   private val B = "b.txt" -> "hi sue\nbob hi\nthere\n"
@@ -79,7 +79,7 @@ class StreamingCheckpointSpec extends SparkSpec {
         // unset, so the manager is the one wordCountToStore installs
         withManager(None)(wordCount(in, ckpt, tmp("graft-ckpt-store")))
       } finally rec.stop()
-    val jfr = Files.createTempFile("graft-forks", ".jfr")
+    val jfr = tempFile("graft-forks", ".jfr")
     try {
       rec.dump(jfr)
       rec.close()

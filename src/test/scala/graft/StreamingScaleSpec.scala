@@ -29,7 +29,7 @@ class StreamingScaleSpec extends SparkSpec {
   // sf1 events as a batch fixture dir (events.parquet), for the batch
   // side of the stream==batch pins
   private lazy val sf1Dir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sf1ev").toString
+    val dir = tempDir("graft-sf1ev").toString
     val sz = GenData.Sizes(1.0)
     spark.range(sz.nEvents).map(GenData.event(_, sz)).toDF()
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -39,7 +39,7 @@ class StreamingScaleSpec extends SparkSpec {
   // the same table as 40 time-ordered single-file chunks (+2 sentinel
   // chunks that flush the final watermark) — ~25k events per micro-batch
   private lazy val replayDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sf1rp").toString
+    val dir = tempDir("graft-sf1rp").toString
     StreamingJobs.writeReplayChunks(spark, sf1Dir, dir, chunks = nChunks)
     dir
   }
@@ -169,10 +169,8 @@ class StreamingScaleSpec extends SparkSpec {
       .groupBy("run", "k").agg(count(lit(1)).as("c"))
       .as[(Int, Int, Long)].collect()
       .groupBy(_._1)
-    val src = java.nio.file.Files
-      .createTempDirectory("graft-sf1feed-src").toString
-    val dst = java.nio.file.Files
-      .createTempDirectory("graft-sf1feed-dst").toString
+    val src = tempDir("graft-sf1feed-src").toString
+    val dst = tempDir("graft-sf1feed-dst").toString
     val cum = new Array[Long](nKeys)
     val store = new FileDocumentStoreFactory(src).open()
     for (r <- 0 until nRuns) {
@@ -201,8 +199,7 @@ class StreamingScaleSpec extends SparkSpec {
 
     // --- CDC compaction at volume: 25k feed rows through
     // flatMapGroupsWithState; state holds exactly the live keys
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-sf1feed-ckpt").toString
+    val ckpt = tempDir("graft-sf1feed-ckpt").toString
     val emitted = scala.collection.mutable
       .ArrayBuffer.empty[(Long, String, String, Long)]
     val samples = runSampled("sf1_compact", () =>

@@ -16,10 +16,22 @@ class StreamingSpec extends SparkSpec {
   // disk — the full source-to-state path a production replay would use,
   // with no MemoryStream anywhere.
   private lazy val replayDir: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-replay").toString
+    val dir = tempDir("graft-replay").toString
     StreamingJobs.writeReplayChunks(spark, sf0001, dir, chunks = 4)
     dir
+  }
+
+  test("writeReplayChunks leaves only its chunks behind") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def staging() = Option(tmp.toFile.list()).toSeq.flatten
+      .filter(_.startsWith("graft-replay-chunk")).toSet
+    val before = staging()
+    val dir = tempDir("graft-replay-clean").toString
+    StreamingJobs.writeReplayChunks(spark, sf0001, dir, chunks = 2)
+    assert(staging() == before)
+    // 2 chunks of events + 2 sentinel chunks, one parquet file each
+    assert(new java.io.File(dir).list().sorted.toSeq ==
+      (0 until 4).map(i => f"chunk_$i%03d.parquet"))
   }
 
   test("file-replayed events through the sessionizer == batch q60 exactly") {
@@ -167,21 +179,17 @@ class StreamingSpec extends SparkSpec {
     // stage the full chunk set elsewhere, then reveal it in two phases
     // around a full query stop/restart — state (open sessions, watermark,
     // seen files) must survive via the checkpoint alone
-    val staging = java.nio.file.Files
-      .createTempDirectory("graft-ckpt-staging").toString
+    val staging = tempDir("graft-ckpt-staging").toString
     StreamingJobs.writeReplayChunks(spark, sf0001, staging, chunks = 4)
-    val live = java.nio.file.Files
-      .createTempDirectory("graft-ckpt-live").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-ckpt-state").toString
+    val live = tempDir("graft-ckpt-live").toString
+    val ckpt = tempDir("graft-ckpt-state").toString
     val chunkFiles = new java.io.File(staging).listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     def reveal(fs: Seq[java.io.File]): Unit = fs.foreach { f =>
       java.nio.file.Files.move(f.toPath,
         new java.io.File(live, f.getName).toPath)
     }
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-ckpt-out").toString
+    val outDir = tempDir("graft-ckpt-out").toString
     // memory sink refuses checkpoint recovery; the parquet file sink is
     // the fault-tolerant one (exactly-once via its _spark_metadata log)
     def startQuery() = StatefulOps.sessionizeStream(
@@ -285,13 +293,11 @@ class StreamingSpec extends SparkSpec {
     // key + per-flush content hash must find the markers and republish
     // NOTHING (pre-fix: a per-invocation UUID key replayed the whole
     // feed, double-counting every doc for downstream CDC consumers).
-    val in = java.nio.file.Files.createTempDirectory("graft-wcs-in")
+    val in = tempDir("graft-wcs-in")
     java.nio.file.Files.write(in.resolve("a.txt"),
       "hi there\nhi\nhi sue bob\nhi sue\nbob hi\n".getBytes)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-wcs-store").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-wcs-ckpt").toString
+    val root = tempDir("graft-wcs-store").toString
+    val ckpt = tempDir("graft-wcs-ckpt").toString
     val factory = new FileDocumentStoreFactory(root)
     def run(): Unit = {
       val textStream = spark.readStream.text(in.toString).toDF("text")

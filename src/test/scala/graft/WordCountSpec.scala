@@ -74,11 +74,11 @@ class WordCountSpec extends SparkSpec {
     def staged() = Files.list(tmp).iterator.asScala
       .filter(_.getFileName.toString.startsWith("graft-stream")).toSet
     val before = staged()
-    val input = Files.createTempFile("graft-cli", ".txt")
+    val input = tempFile("graft-cli", ".txt")
     Files.write(input, "hi there\nhi\n".getBytes)
     val o = graft.core.Options.parse(Array("--implementation=streaming",
       s"--inputFile=$input",
-      s"--outputDir=${Files.createTempDirectory("graft-cli-store")}"))
+      s"--outputDir=${tempDir("graft-cli-store")}"))
     assert(graft.core.Main.implementations("streaming")(o, spark) == 2L)
     assert(staged() -- before == Set.empty)
   }
