@@ -35,23 +35,6 @@ object TextFunctions {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** MinHash signature of a string-array column: for seed i in [0, k),
-    * sig[i] = min over elements of xxhash64(i, element). One pass over the
-    * array per seed via nested higher-order functions; no explode, no
-    * shuffle.
-    *
-    * ⚠ Eval-once rule for nested HOFs: `arr` MUST be a materialized
-    * attribute (its own projection behind an exchange/cache barrier), not
-    * an inline expression — Catalyst's CollapseProject inlines single-use
-    * aliases into lambda bodies, and a lambda body is re-evaluated per
-    * outer element, turning an inlined shingle pipeline into k×
-    * recomputation per row. (Observed: 650 s on one task before the fix;
-    * sub-second after.)
-    */
-  def minHashSignature(arr: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)), i =>
-      array_min(transform(arr, s => xxhash64(i, s))))
-
   /** LSH band hashes of a minhash signature (array<long> attribute):
     * bands of `rowsPerBand`, each band hashed to one long. Pairs sharing
     * any band hash are candidate near-duplicates. */
@@ -59,36 +42,6 @@ object TextFunctions {
     transform(sequence(lit(0), lit(bands - 1)), b =>
       xxhash64(concat_ws(",",
         slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))
-          .cast("array<string>"))))
-
-  /** Fused MinHash + LSH banding over a string-array attribute: band b's
-    * hash combines the `rowsPerBand` minhashes for seeds
-    * [b*rowsPerBand, (b+1)*rowsPerBand). Work per row is exactly
-    * bands×rowsPerBand passes over `arr` — the minimum for minhash —
-    * with no intermediate signature column to be re-inlined.
-    * Same eval-once caveat as [[minHashSignature]]: pass an attribute.
-    */
-  def minHashBands(arr: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      xxhash64(concat_ws(",",
-        transform(sequence(lit(0), lit(rowsPerBand - 1)), r =>
-          array_min(transform(arr, s =>
-            xxhash64(b * rowsPerBand + r, s))))
-          .cast("array<string>"))))
-
-  /** [[minHashBands]] over PRE-HASHED shingles (an array<long> attribute of
-    * xxhash64(shingle) values): each seed's permutation re-hashes the
-    * 8-byte base hash (fixed-width — ~10× cheaper than re-hashing the
-    * shingle string per seed, and overflow-free under ANSI mode, unlike an
-    * LCG mix which would throw ARITHMETIC_OVERFLOW). Base-hash the array
-    * once per row (`transform(sh, s => xxhash64(s))`, materialized behind
-    * a barrier), then band from it. */
-  def minHashBandsFromHashes(h0: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      xxhash64(concat_ws(",",
-        transform(sequence(lit(0), lit(rowsPerBand - 1)), r =>
-          array_min(transform(h0, h =>
-            xxhash64(b * rowsPerBand + r, h))))
           .cast("array<string>"))))
 
   /** 64-bit SimHash of a token-array column: token hash bit j votes +1/-1

@@ -104,14 +104,15 @@ object Checkpoint {
   }
 
   /** Measured storage footprint (memory + disk) of an eager
-    * localCheckpoint's blocks; 0 when the plan is not a bare
-    * checkpoint or the block manager has no record (safe: reads as
-    * below-threshold, i.e. the unstamped round-16 behavior). */
+    * localCheckpoint's blocks, read synchronously from the block
+    * manager master (`getRDDStorageInfo` reads the status store the
+    * listener bus fills later, so it can still read 0 right after the
+    * checkpoint job). 0 when the plan is not a bare checkpoint (safe:
+    * reads as below-threshold, i.e. the unstamped round-16 behavior). */
   private def checkpointedBytes(ck: DataFrame): Long =
-    checkpointedRdd(ck).flatMap { rdd =>
-      ck.sparkSession.sparkContext.getRDDStorageInfo
-        .find(_.id == rdd.id).map(i => i.memSize + i.diskSize)
-    }.getOrElse(0L)
+    checkpointedRdd(ck)
+      .map(rdd => GraftBridge.storedRddBytes(ck.sparkSession, rdd.id))
+      .getOrElse(0L)
 
   private def checkpointedRdd(ck: DataFrame)
       : Option[org.apache.spark.rdd.RDD[_]] =

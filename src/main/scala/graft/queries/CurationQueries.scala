@@ -110,8 +110,8 @@ object CurationQueries {
     "decontam_minhash" -> ((s, d) => {
       val minhash64 = udaf(graft.functions.MinHashAggregator)
       // one co-partitioned materialization feeds both sides' signature
-      // aggregates, the verify join, and both size aggregates — the
-      // dedup_minhash_lsh index pattern (see shingleIndex's scaladoc)
+      // aggregates, the verify join, and both size aggregates (the
+      // index pattern of shingleIndex's scaladoc)
       val sh = Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           explode(shingles(col("text"), 3)).as("s"))

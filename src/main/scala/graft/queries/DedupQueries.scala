@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.Checkpoint.CheckpointOps
 import graft.functions.TextFunctions._
-import graft.functions.VectorFunctions
+import graft.functions.{MinHashBands, VectorFunctions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -149,7 +149,7 @@ object DedupQueries {
     * candidate blowup is the inverted-index scale risk) stay out of the
     * join unless a doc contains almost nothing else. Verification then
     * runs [[exactJaccardOn]] over the candidate docs' full shingle sets
-    * (semi-join pushdown), same as the MinHash path. */
+    * (semi-join pushdown). */
   private[graft] def prefixJaccardPairs(
       s: SparkSession, d: String, t: Double = JaccardThreshold): DataFrame = {
     // Materialize the index ONCE (localCheckpoint cuts lineage): this
@@ -730,35 +730,31 @@ object DedupQueries {
     // verification of candidate docs only. Probabilistic recall (>0.99 at
     // j≥0.9); pinned against dedup_ngram_jaccard in DedupSpec.
     //
-    // Cost shape (this was a 345 s hotspot as an interpreted-HOF
-    // pipeline):
-    //  - shingles explode once, base-hash in a codegen'd projection;
-    //  - all 64 minima in ONE JVM-native pass via the custom
-    //    MinHashAggregator (partial agg before the shuffle — signatures
-    //    cross the wire, never shingles);
-    //  - bucket pairs come from groupBy+collect_list (bands computed once)
-    //    instead of a self-join that re-evaluates the signature pipeline;
-    //  - exact-jaccard verification runs on the candidate docs' shingles
-    //    only (semi-join pushdown), not the whole corpus.
+    // Cost shape: every step but candidate grouping is per-row work.
+    //  - one scan, and per document ONE native graft_minhash_bands call
+    //    over its shingle array: 64 minima and 8 band hashes in a JVM
+    //    loop, no exploded (doc_id, shingle) index, no aggregate; only
+    //    (doc_id, band_idx, band_hash) rows reach the grouping shuffle;
+    //  - bucket pairs come from groupBy+collect_list instead of a
+    //    self-join; the candidate pairs are the query's one checkpoint
+    //    (candDocs and the verification join both read them);
+    //  - verification rescans only the candidate documents (broadcast
+    //    semi-join on doc_id), recomputes their shingle arrays and takes
+    //    |A∩B| with array_intersect per pair: the same long-to-double
+    //    division as exactJaccardOn, so the doubles are identical.
     "dedup_minhash_lsh" -> ((s, d) => {
-      val minhash64 = udaf(graft.functions.MinHashAggregator)
-      // one materialization of the index for banding + verification
-      // (see prefixJaccardPairs for why localCheckpoint, not cache;
-      // see exactJaccardPairs for the index-build repartition)
-      // size-ADAPTIVE stamp (r17): below the threshold identical to the
-      // plain repartition+checkpoint (r16 measured the always-on stamp
-      // at +0.5 s here — the same conversion HELPED dedup_ngram_jaccard;
-      // consumer weight differs); above it the index co-partitions by
-      // doc_id for the signature groupBy and the verify semi-join
-      val sh = shingleIndex(s, d).repartition(col("doc_id"))
-        .buildCheckpointAdaptiveBy("doc_id")
-      val banded = sh
-        .select(col("doc_id"), xxhash64(col("s")).as("h"))
-        .groupBy("doc_id").agg(minhash64(col("h")).as("sig"))
-        .select(col("doc_id"), bandHashes(col("sig"), 8, 8).as("bands"))
-      val cand = banded
-        .select(col("doc_id"),
-          posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
+      // one read: each Tables.documents call infers the schema in a job
+      val docs = Tables.documents(s, d)
+      def docShingles(of: DataFrame) =
+        of.select(col("doc_id"), shingles(col("text"), 3).as("sh"))
+      // docs without a shingle (null text, under 3 tokens) get NULL bands
+      // and explode to no rows: all of them would share one signature,
+      // collide in every band and verify as 0/0 (see MinHashBands). The
+      // bands stay inline in the generator: over an attribute, Spark
+      // would infer a `size(bands) > 0` filter and evaluate them twice.
+      val cand = docShingles(docs)
+        .select(col("doc_id"), posexplode(MinHashBands(col("sh"), 8, 8))
+          .as(Seq("band_idx", "band_hash")))
         .groupBy("band_idx", "band_hash")
         .agg(collect_list("doc_id").as("ids"))
         .filter(size(col("ids")) > 1)
@@ -770,10 +766,18 @@ object DedupQueries {
         .buildCheckpoint() // candDocs + the verification join
       val candDocs = cand.select(col("doc_a").as("doc_id"))
         .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-      val candShingles = sh
-        .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-        .select("doc_id", "s")
-      cand.join(exactJaccardOn(candShingles), Seq("doc_a", "doc_b"))
+      val candSh = docShingles(
+        docs.join(broadcast(candDocs), Seq("doc_id"), "left_semi"))
+      cand
+        .join(candSh.toDF("doc_a", "sh_a"), "doc_a")
+        .join(candSh.toDF("doc_b", "sh_b"), "doc_b")
+        .select(col("doc_a"), col("doc_b"),
+          size(array_intersect(col("sh_a"), col("sh_b"))).cast("long")
+            .as("inter"),
+          (size(col("sh_a")).cast("long") + size(col("sh_b")).cast("long"))
+            .as("nab"))
+        .select(col("doc_a"), col("doc_b"), (col("inter").cast("double") /
+          (col("nab") - col("inter"))).as("jaccard"))
         .filter(col("jaccard") >= JaccardThreshold)
         .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6)
           .as("jaccard"))

@@ -8,7 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   QueryDebug explain <query>[,query...] [sfDir]    — physical plan dump
   *   QueryDebug explainf <query>[,query...] <outDir> <suffix> [sfDir]
   *                                                     — formatted plans to files
-  *   QueryDebug time <sfDir> <query>[,query...] [reps] — wall clock + work counters
+  *   QueryDebug time <sfDir> <query>[,query...] [reps] — wall clock, work
+  *                                                     counters, codegen compilations
   *   QueryDebug audit [sfDir]                          — wide-shuffle audit
   *   QueryDebug dump <sfDir> <query>[,query...] <outDir>
   *                                                     — Verify's parquet dump
@@ -55,7 +56,9 @@ object QueryDebug {
 
   /** The executed plan as `explain` and `plans` print it, cut at 4000
     * characters. `stable` masks what differs between two runs of the
-    * same plan — expression ids, `plan_id`s and the random suffixes of
+    * same plan — expression ids, `plan_id`s, the JVM-wide counter in
+    * lambda variable names (`x_5`, numbered by how many lambdas the
+    * process built before) and the random suffixes of
     * graft's temp-directory names (`createTempDirectory`'s decimal one,
     * the IVF index's `_<pid>_<md5>`) — before the cut, so two dumps of
     * unchanged plans are byte-identical. */
@@ -67,6 +70,7 @@ object QueryDebug {
   private val runSpecific = Seq(
     "#\\d+".r -> "#N",
     "plan_id=\\d+".r -> "plan_id=N",
+    "(lambda \\w+?_)\\d+".r -> "$1N",
     "(/tmp/graft[a-z_-]*?)(?:_[0-9a-f]+_[0-9a-f]{32}|\\d+)".r -> "$1*")
 
   /** explainf <names,comma-sep> <outDir> <suffix> [sfDir]: writes each
@@ -101,7 +105,7 @@ object QueryDebug {
   private val wideSub = Seq("text", "embedding")
   private val wideExact = Set("toks", "tok", "w", "word", "v", "u",
     "u_a", "u_b", "v_a", "v_b", "q_v", "c_v", "q_emb", "c_emb",
-    "prior_u", "prior_v",
+    "prior_u", "prior_v", "sh_a", "sh_b",
     "norm_text", "chunk_text", "scrubbed")
   private def isWide(n: String) =
     wideSub.exists(n.contains) || wideExact.contains(n)
@@ -247,7 +251,7 @@ object QueryDebug {
     "q11_top_orders" -> "global top-k: TakeOrderedAndProject (per-partition heap + driver merge of k rows, no global sort)",
     "q33_asof_last_click" -> "as-of via union + running window (one shuffle on user_id)",
     "q41_asof_custom" -> "as-of via the custom AsOfJoinExec: co-partitioned exchanges + in-partition (key,time) sorts + O(n+m) merge",
-    "dedup_minhash_lsh" -> "MinHash custom aggregate: partial_minhashaggregator below the exchange (signatures shuffle to group, shingles only at the one-time index build); localCheckpoint shares the shingle index across banding + verification",
+    "dedup_minhash_lsh" -> "MinHash-LSH per row: one graft_minhash_bands call per document above the scan (no shingle index, no aggregate), only (band_idx, band_hash, doc_id) reaches the grouping exchange; the checkpointed candidate pairs drive a broadcast semi-join that rescans only candidate documents for the array_intersect verify",
     "sim_topk_bruteforce" -> "brute-force ANN baseline: broadcast query vector, codegen'd graft_dot, TakeOrderedAndProject",
     "dedup_ngram_prefix" -> "PPJoin prefix filter: rarity-ranked per-doc prefix index feeds the pair join (hot shingles excluded); exact-jaccard verify over semi-joined candidate docs",
     "dedup_embedding_lsh" -> "banded projection join: band equi-joins replace the BroadcastNestedLoop all-pairs, recall 1.0 by the Cauchy-Schwarz band containment",
@@ -375,14 +379,20 @@ object QueryDebug {
             t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
           nTasks.incrementAndGet()
       })
+    // classes Spark compiled from generated code (JVM-wide): a warm rep
+    // that still compiles is missing Spark's codegen cache
+    val compilations =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val verbose = sys.env.get("GRAFT_TIME_JOBS").contains("1")
     for (r <- 1 to reps; n <- names) {
       done.clear(); stageLog.clear()
       Seq(nJobs, nStages, nTasks, taskMs, shufWrite, shufRead, inputB)
         .foreach(_.set(0L))
+      val compiled0 = compilations.getCount
       val t0 = System.nanoTime()
       val cnt = graft.SparkEntry.queries(n)(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiled = compilations.getCount - compiled0
       // drain listener events deterministically: a fixed sleep under-
       // counted jobs/stages/shuffle on a loaded box (advisor round-16)
       org.apache.spark.sql.GraftBridge.drainListenerBus(spark, 10000)
@@ -390,7 +400,7 @@ object QueryDebug {
         f"jobs=${nJobs.get}%-3d stages=${nStages.get}%-3d tasks=${nTasks.get}%-5d " +
         f"taskTime=${taskMs.get / 1000.0}%7.1f s  " +
         f"shufW=${shufWrite.get / 1048576.0}%8.2f MB shufR=${shufRead.get / 1048576.0}%8.2f MB " +
-        f"input=${inputB.get / 1048576.0}%8.2f MB")
+        f"input=${inputB.get / 1048576.0}%8.2f MB compiled=$compiled")
       if (verbose) {
         done.forEach { case (id, secs, desc) =>
           if (secs >= 0.05)

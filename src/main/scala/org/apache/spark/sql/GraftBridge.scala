@@ -118,6 +118,18 @@ object GraftBridge {
   def drainListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 
+  /** Bytes (memory + disk) of `rddId`'s cached blocks as the block
+    * manager master holds them. Executors report every block they store
+    * to the master before their task ends, so after the job that stored
+    * them this is exact; `SparkContext.getRDDStorageInfo` reads the
+    * status store instead, which the listener bus fills asynchronously. */
+  def storedRddBytes(spark: SparkSession, rddId: Int): Long =
+    spark.sparkContext.env.blockManager.master.getStorageStatus.iterator
+      .flatMap(_.rddBlocks.iterator)
+      .collect { case (org.apache.spark.storage.RDDBlockId(`rddId`, _), st) =>
+        st.memSize + st.diskSize }
+      .sum
+
   /** Re-stamp a checkpointed DataFrame's `LogicalRDD` with the hash
     * partitioning its rows PHYSICALLY have. `Dataset.localCheckpoint`
     * tries to carry the child plan's partitioning into the LogicalRDD,

@@ -64,6 +64,28 @@ class AdaptiveStampSpec extends SparkSpec {
         .head().getLong(0))
   }
 
+  test("the stamp decision does not wait for the listener bus") {
+    // hold the status queue: the checkpoint job's block updates reach the
+    // status store only after the release, so a size read from it sees 0
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val holder = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusProbe.addToStatusQueue(sc, holder)
+    try {
+      val out = withThreshold(1L)(
+        input.repartition(4).buildCheckpointAdaptiveBy("k"))
+      assert(out.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+        .outputPartitioning.isInstanceOf[HashPartitioning])
+    } finally {
+      release.countDown()
+      sc.removeSparkListener(holder)
+    }
+  }
+
   test("both paths produce identical aggregates") {
     val small = withThreshold(Long.MaxValue)(
       input.buildCheckpointAdaptiveBy("k"))

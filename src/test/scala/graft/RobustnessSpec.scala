@@ -11,19 +11,23 @@ import org.apache.spark.sql.functions._
 class RobustnessSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val advDir: String = {
-    val dir = tempDir("graft-adv").toString
-    Seq(
-      (1L, "", "en", "src0", 0L),
-      (2L, "   ", "en", "src0", 3L),
-      (3L, "solo", "en", "src1", 4L),
-      (4L, null.asInstanceOf[String], "en", "src1", 0L),
-      (5L, "the quick brown fox jumps over the lazy dog", "en", "src2", 43L),
-      (6L, "a a a a a a a a", "en", "src2", 15L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
+  private val advDocs = Seq(
+    (1L, "", "en", "src0", 0L),
+    (2L, "   ", "en", "src0", 3L),
+    (3L, "solo", "en", "src1", 4L),
+    (4L, null.asInstanceOf[String], "en", "src1", 0L),
+    (5L, "the quick brown fox jumps over the lazy dog", "en", "src2", 43L),
+    (6L, "a a a a a a a a", "en", "src2", 15L))
+
+  private def documentsDir(name: String,
+      docs: Seq[(Long, String, String, String, Long)]): String = {
+    val dir = tempDir(name).toString
+    docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
   }
+
+  private lazy val advDir: String = documentsDir("graft-adv", advDocs)
 
   private val textQueries = Seq(
     "wordcount", "wordcount_format", "wordcount_topk", "line_stats",
@@ -31,7 +35,7 @@ class RobustnessSpec extends SparkSpec {
     "ta_fingerprint_md5", "ta_chunks", "ta_normalize", "ta_tfidf",
     "ta_repetition", "ta_gopher_filters", "pack_sequences",
     "decontam_overlap", "sample_stratified", "dedup_exact",
-    "dedup_ngram_jaccard", "dedup_clusters",
+    "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_clusters",
     "mm_decode_meta", "mm_frame_sample", "mm_resize", "mm_features",
     // round-3 curation ops (null text, no-shingle docs, n < 10 deciles,
     // empty benchmark shingle set for the bloom build)
@@ -76,6 +80,23 @@ class RobustnessSpec extends SparkSpec {
       val rows = SparkEntry.queries(name)(spark, advDir).collect()
       assert(rows != null, name) // materializes without throwing
     }
+  }
+
+  test("dedup_minhash_lsh pairs == dedup_ngram_jaccard pairs on degenerate docs") {
+    // the adversarial docs plus a planted near-dup triple: docs without a
+    // shingle (empty, whitespace, one token, null) must pair with nothing
+    val long = "one two three four five six seven eight nine ten eleven " +
+      "twelve thirteen fourteen fifteen sixteen seventeen eighteen"
+    val dir = documentsDir("graft-adv-lsh", advDocs ++ Seq(
+      (7L, long, "en", "src3", 0L),
+      (8L, long, "en", "src3", 0L),
+      (9L, long + " nineteen", "en", "src3", 0L)))
+    def pairs(q: String) = SparkEntry.queries(q)(spark, dir)
+      .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)]
+      .collect().toSet
+    val exact = pairs("dedup_ngram_jaccard")
+    assert(exact.map(p => (p._1, p._2)) == Set((7L, 8L), (7L, 9L), (8L, 9L)))
+    assert(pairs("dedup_minhash_lsh") == exact)
   }
 
   private lazy val advEventsDir: String = {
