@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -26,11 +26,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * all of them would collide in every band and verify as jaccard 0/0:
   * DIVIDE_BY_ZERO under ANSI mode, and without it NaN, which passes
   * `>= t` under Spark's NaN ordering. Exploding the bands drops these
-  * rows. CodegenFallback for the same reason as
-  * [[WordShingles]]: the per-row work is one long JVM loop.
+  * rows. The generated code calls that loop ([[bandsOf]]), as
+  * [[WordShingles]] does: the per-row work is one long JVM loop, and the
+  * operator holding the expression stays inside whole-stage codegen.
   */
 case class MinHashBands(child: Expression, bands: Int, rowsPerBand: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression {
   require(bands >= 1 && rowsPerBand >= 1 && bands * rowsPerBand <= MinHash.K,
     s"need 1 <= bands * rowsPerBand <= ${MinHash.K}, got $bands x $rowsPerBand")
 
@@ -42,8 +43,11 @@ case class MinHashBands(child: Expression, bands: Int, rowsPerBand: Int)
 
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
-    if (v == null) return null
-    val arr = v.asInstanceOf[ArrayData]
+    if (v == null) null else bandsOf(v.asInstanceOf[ArrayData])
+  }
+
+  /** The band hashes of one non-null shingle array; NULL when empty. */
+  def bandsOf(arr: ArrayData): ArrayData = {
     if (arr.numElements() == 0) return null
     val sig = Array.fill(MinHash.K)(Long.MaxValue)
     var i = 0
@@ -70,6 +74,15 @@ case class MinHashBands(child: Expression, bands: Int, rowsPerBand: Int)
       b += 1
     }
     new GenericArrayData(out)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("minHashBands", this)
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""
+         |${ev.value} = $self.bandsOf($a);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
   }
 
   override protected def withNewChildInternal(

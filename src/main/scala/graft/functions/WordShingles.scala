@@ -3,8 +3,9 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,9 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * array_distinct): interpreted lambda evaluation there cost ~0.25 ms per
   * document (≈5 µs per shingle) — this loop is ~20× cheaper and feeds
   * every shingle consumer (n-gram jaccard, MinHash-LSH, decontamination).
-  * CodegenFallback: the per-row work is a long JVM loop, so the boxed
-  * call boundary is noise; what matters is not evaluating an expression
-  * tree per token.
+  * The generated code calls that loop ([[shingle]]) on the child's
+  * value: the per-row work is a long JVM loop, so the call boundary is
+  * noise, and unlike a CodegenFallback the operator holding the
+  * expression stays inside whole-stage codegen.
   *
   * Semantics pinned equal to the HOF form by TextFunctionsSpec, including
   * the edge the HOF form has: NULL text yields an EMPTY array (its
@@ -26,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * not null — so this expression is a drop-in.
   */
 case class WordShingles(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression {
   require(n >= 1, s"shingle size must be >= 1, got $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -35,10 +37,13 @@ case class WordShingles(child: Expression, n: Int)
 
   private val empty = new GenericArrayData(Array.empty[Any])
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
+  override def eval(input: InternalRow): Any =
+    shingle(child.eval(input).asInstanceOf[UTF8String])
+
+  /** The shingles of one text; empty for NULL. */
+  def shingle(v: UTF8String): ArrayData = {
     if (v == null) return empty
-    val text = v.asInstanceOf[UTF8String].toString
+    val text = v.toString
     // tokenize: split on single spaces, drop empties (runs of spaces)
     val toks = new java.util.ArrayList[String]()
     var i = 0
@@ -66,6 +71,15 @@ case class WordShingles(child: Expression, n: Int)
       s += 1
     }
     new GenericArrayData(seen.toArray(new Array[AnyRef](seen.size)))
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("shingles", this)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |ArrayData ${ev.value} = $self.shingle(${c.isNull} ? null : ${c.value});
+      """.stripMargin, isNull = FalseLiteral)
   }
 
   override protected def withNewChildInternal(

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
@@ -70,10 +70,13 @@ case class AsOfJoinExec(
     val lTime = leftTime; val rTime = rightTime
     val lOut = left.output; val rOut = right.output
     left.execute().zipPartitions(right.execute()) { (lIt, rIt) =>
-      val lKeyProj = UnsafeProjection.create(Seq(lKey), lOut)
-      val rKeyProj = UnsafeProjection.create(Seq(rKey), rOut)
-      val lTimeProj = UnsafeProjection.create(Seq(lTime), lOut)
-      val rTimeProj = UnsafeProjection.create(Seq(rTime), rOut)
+      // keys and times are read interpreted, bound to their ordinals: a
+      // generated projection per column would be four more compiled
+      // classes for a single field read each
+      val lKeyRef = BindReferences.bindReference(lKey, lOut)
+      val rKeyRef = BindReferences.bindReference(rKey, rOut)
+      val lTimeRef = BindReferences.bindReference(lTime, lOut)
+      val rTimeRef = BindReferences.bindReference(rTime, rOut)
       val keyOrd = TypeUtils.getInterpretedOrdering(lKey.dataType)
         .asInstanceOf[Ordering[Any]]
       val timeOrd = TypeUtils.getInterpretedOrdering(lTime.dataType)
@@ -88,8 +91,8 @@ case class AsOfJoinExec(
       var lastRow: InternalRow = null
 
       lIt.map { lRow =>
-        val lk = lKeyProj(lRow).get(0, lKey.dataType)
-        val lt = lTimeProj(lRow).get(0, lTime.dataType)
+        val lk = lKeyRef.eval(lRow)
+        val lt = lTimeRef.eval(lRow)
         // advance the right side through every row with
         // (key < lk) or (key == lk && time <= lt); null keys never match.
         // Right rows with null key or null time are consumed and discarded:
@@ -99,7 +102,7 @@ case class AsOfJoinExec(
         var advancing = lk != null
         while (advancing && rBuf.hasNext) {
           val head = rBuf.head
-          val rk = rKeyProj(head).get(0, rKey.dataType)
+          val rk = rKeyRef.eval(head)
           if (rk == null) {
             rBuf.next() // null key matches nothing; discard
           } else {
@@ -107,7 +110,7 @@ case class AsOfJoinExec(
             if (kc < 0) {
               rBuf.next() // right key already passed; discard
             } else if (kc == 0) {
-              val rt = rTimeProj(head).get(0, rTime.dataType)
+              val rt = rTimeRef.eval(head)
               if (rt == null) {
                 rBuf.next() // null time satisfies no `<= lt`; discard
               } else if (lt != null && timeOrd.compare(rt, lt) <= 0) {

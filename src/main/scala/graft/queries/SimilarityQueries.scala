@@ -615,7 +615,9 @@ object SimilarityQueries {
     * exactly 1.0). The registered query serves nProbe=4. */
   private[graft] def annBatch(
       s: SparkSession, d: String, nProbe: Int, k: Int = 10): DataFrame = {
-    val e = rawVecs(s, d)
+    // one read: each Tables.embeddings call infers the schema in a job
+    val emb = Tables.embeddings(s, d)
+    val e = rawVecs(emb)
     val centroids = ivfModel(s, d)
     if (centroids.isEmpty) {
       // empty corpus -> no model and no queries; empty result with the
@@ -626,18 +628,23 @@ object SimilarityQueries {
       val assigned = assignCells(e, centroids)
       // no join against rawVecs for the label: that equi-join would
       // shuffle vectors as payload — project label in the same scan
-      val qset = Tables.embeddings(s, d).filter(col("label") === 0)
+      val qset = emb.filter(col("label") === 0)
         .select(col("vec_id").as("qid"),
           col("embedding").cast("array<double>").as("q_v"))
-      val probes = qset
-        .withColumn("probe", probeCells(col("q_v"), centroids, nProbe))
-        .select(col("qid"), col("q_v"), explode(col("probe")).as("cell"))
+      // the probe ranking stays inline in the generator: over an
+      // attribute, Spark would infer a `size(probe) > 0` filter and rank
+      // every query twice
+      val probes = qset.select(col("qid"), col("q_v"),
+        explode(probeCells(col("q_v"), centroids, nProbe)).as("cell"))
       val scored = assigned.join(broadcast(probes), Seq("cell"))
         .filter(col("vec_id") =!= col("qid")) // queries ARE corpus rows here
         .select(col("qid"), cosine(col("v"), col("q_v")).as("cos_raw"),
           col("vec_id"))
+      // the top-k side is at most k rows per query of the batch that is
+      // already broadcast above, so the coverage join broadcasts it too
+      // instead of sorting and shuffling both sides
       qset.select(col("qid"))
-        .join(topkRanked(scored, k), Seq("qid"), "left")
+        .join(broadcast(topkRanked(scored, k)), Seq("qid"), "left")
     }
   }
 
@@ -646,7 +653,11 @@ object SimilarityQueries {
   // file). At scale the scan is already split across files
   // (spark.sql.files.maxPartitionBytes); the cast is a per-row map.
   private[graft] def rawVecs(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
+    rawVecs(Tables.embeddings(s, d))
+
+  /** (vec_id, v) over an already-loaded embeddings table. */
+  private[graft] def rawVecs(embeddings: DataFrame): DataFrame =
+    embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
   /** Memoized IVF coarse quantizer per dataset path: the three IVF
@@ -845,13 +856,19 @@ object SimilarityQueries {
         lit(i).as("cell"))
     }: _*)
 
-  /** nProbe best cells for a query-vector column, as array<int>: the
-    * shared (distance, cell) structs sorted and sliced — composed (not
-    * NearestCell) because ranking needs the nProbe BEST cells, not just
-    * the argmin. ONE definition serves the offline batch query and the
-    * streaming server (StreamingJobs.annServe) so probe orderings cannot
-    * diverge. */
+  /** nProbe best cells for a query-vector column, as array<int>, via
+    * the native [[graft.functions.NearestCells]]: the ranking of the
+    * shared (distance, cell) structs, compiled into the probe's stage.
+    * ONE definition serves the offline batch query and the streaming
+    * server (StreamingJobs.annServe) so probe orderings cannot diverge. */
   private[graft] def probeCells(
+      qv: org.apache.spark.sql.Column, centroids: Seq[Seq[Double]],
+      nProbe: Int): org.apache.spark.sql.Column =
+    graft.functions.NearestCells.nearest(qv, centroids, nProbe)
+
+  /** The composed form probeCells replaced — kept for the parity spec:
+    * the shared (distance, cell) structs sorted and sliced. */
+  private[graft] def probeCellsComposed(
       qv: org.apache.spark.sql.Column, centroids: Seq[Seq[Double]],
       nProbe: Int): org.apache.spark.sql.Column =
     transform(slice(array_sort(cellDistStructs(qv, centroids)), 1, nProbe),

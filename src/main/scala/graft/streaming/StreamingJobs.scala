@@ -239,9 +239,8 @@ object StreamingJobs {
       "annServe: empty centroid model — train the IVF quantizer " +
         "(SimilarityQueries.ivfModel) before serving")
     val probed = queries
-      .withColumn("probe", graft.queries.SimilarityQueries
-        .probeCells(col("q_v"), centroids, nProbe))
-      .select(col("qid"), col("q_v"), explode(col("probe")).as("cell"))
+      .select(col("qid"), col("q_v"), explode(graft.queries.SimilarityQueries
+        .probeCells(col("q_v"), centroids, nProbe)).as("cell"))
       .join(assigned, Seq("cell")) // stream-static equi-join
     val candidates =
       if (excludeSelf) probed.filter(col("vec_id") =!= col("qid"))

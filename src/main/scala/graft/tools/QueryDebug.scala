@@ -14,6 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   QueryDebug dump <sfDir> <query>[,query...] <outDir>
   *                                                     — Verify's parquet dump
   *   QueryDebug plans <out.md> [sfDir]                 — regenerate PLANS.md
+  *   QueryDebug codegen <sfDir> <query>[,query...]     — codegen working set
   *
   * Every mode runs on ONE session built by the rule Bench and Verify
   * use: SPARK_GRAFT_CPUS threads and shuffle partitions (default: the
@@ -29,9 +30,10 @@ object QueryDebug {
         case "time"     => (s, a) => { time(s, a); true }
         case "dump"     => (s, a) => { dump(s, a); true }
         case "plans"    => (s, a) => { plans(s, a); true }
+        case "codegen"  => (s, a) => { codegen(s, a); true }
         case "audit"    => audit
         case other => sys.error(s"unknown mode '$other' " +
-          "(expected explain|explainf|time|audit|dump|plans)")
+          "(expected explain|explainf|time|audit|dump|plans|codegen)")
       }
     val spark = session()
     val clean = try run(spark, args.drop(1)) finally spark.stop()
@@ -251,7 +253,7 @@ object QueryDebug {
     "q11_top_orders" -> "global top-k: TakeOrderedAndProject (per-partition heap + driver merge of k rows, no global sort)",
     "q33_asof_last_click" -> "as-of via union + running window (one shuffle on user_id)",
     "q41_asof_custom" -> "as-of via the custom AsOfJoinExec: co-partitioned exchanges + in-partition (key,time) sorts + O(n+m) merge",
-    "dedup_minhash_lsh" -> "MinHash-LSH per row: one graft_minhash_bands call per document above the scan (no shingle index, no aggregate), only (band_idx, band_hash, doc_id) reaches the grouping exchange; the checkpointed candidate pairs drive a broadcast semi-join that rescans only candidate documents for the array_intersect verify",
+    "dedup_minhash_lsh" -> "MinHash-LSH per row: one graft_minhash_bands call per document above the scan (no shingle index, no aggregate), only (band_idx, band_hash, doc_id) reaches the grouping exchange and graft_ordered_pairs turns each bucket into pairs inside one codegen stage; the checkpointed candidate pairs drive a broadcast semi-join that rescans only candidate documents, their shingle arrays are broadcast ONCE for both sides of the pair join, and one array_intersect per pair feeds the threshold generator",
     "sim_topk_bruteforce" -> "brute-force ANN baseline: broadcast query vector, codegen'd graft_dot, TakeOrderedAndProject",
     "dedup_ngram_prefix" -> "PPJoin prefix filter: rarity-ranked per-doc prefix index feeds the pair join (hot shingles excluded); exact-jaccard verify over semi-joined candidate docs",
     "dedup_embedding_lsh" -> "banded projection join: band equi-joins replace the BroadcastNestedLoop all-pairs, recall 1.0 by the Cauchy-Schwarz band containment",
@@ -277,7 +279,7 @@ object QueryDebug {
     "q58_funnel_steps" -> "ordered funnel: per-step user-keyed aggregates chained on one partitioning; event_type filters pushed to the parquet scan",
     "ta_boilerplate" -> "boilerplate span removal: hot-gram set broadcast into the occurrence scan, covered positions anti-joined on (doc_id,pos), order-preserving reassembly as one partial+final collect_list aggregate",
     "pipeline_e2e" -> "end-to-end curation verdict: stage outputs are checkpointed seams (quality -> NARROW fingerprint-window exact dedup -> CC over canonicals), final verdict is two doc_id-keyed left joins",
-    "sim_ann_batch" -> "batched-query ANN: probe set broadcast into the cell join (corpus vectors never shuffle), per-query top-k via partial_topkaggregator heaps, coverage left-join",
+    "sim_ann_batch" -> "batched-query ANN: native graft_nearest_cells probe ranking inline in the explode (one codegen stage), probe set broadcast into the cell join (corpus vectors never shuffle), per-query top-k via partial_topkaggregator heaps, coverage left-join broadcasting the k-per-query top-k side (no sort-merge)",
     "sim_ann_ivf_indexed" -> "persisted IVF probe: cell IN (...) lands in PartitionFilters — only nProbe cell directories are listed, broadcast query vector, TakeOrderedAndProject",
     "dedup_simhash_md5" -> "oracle-checked SimHash twin: md5-derived 60-bit token hashes; the signature build (partial_simhashaggregator below one doc exchange) sits under the checkpoint feeding both sides of the 16-bit piece-blocked self-join — run the audit's inline mode to see it",
     "curate_shuffle" -> "seeded global permutation: md5 hash key projection + quantile-bucketed global rank — no single-partition window, no wide columns in any exchange",
@@ -379,20 +381,17 @@ object QueryDebug {
             t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
           nTasks.incrementAndGet()
       })
-    // classes Spark compiled from generated code (JVM-wide): a warm rep
-    // that still compiles is missing Spark's codegen cache
-    val compilations =
-      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val verbose = sys.env.get("GRAFT_TIME_JOBS").contains("1")
     for (r <- 1 to reps; n <- names) {
       done.clear(); stageLog.clear()
       Seq(nJobs, nStages, nTasks, taskMs, shufWrite, shufRead, inputB)
         .foreach(_.set(0L))
-      val compiled0 = compilations.getCount
       val t0 = System.nanoTime()
-      val cnt = graft.SparkEntry.queries(n)(spark, sfDir).count()
+      // classes Spark compiled from generated code (JVM-wide): a warm rep
+      // that still compiles is missing Spark's codegen cache
+      val (cnt, compiled) = CodegenWorkingSet.counting(
+        graft.SparkEntry.queries(n)(spark, sfDir).count())
       val wall = (System.nanoTime() - t0) / 1e9
-      val compiled = compilations.getCount - compiled0
       // drain listener events deterministically: a fixed sleep under-
       // counted jobs/stages/shuffle on a loaded box (advisor round-16)
       org.apache.spark.sql.GraftBridge.drainListenerBus(spark, 10000)
@@ -417,5 +416,30 @@ object QueryDebug {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }
+  }
+
+  /** codegen <sfDir> <names,comma-sep>: the warm codegen working set of
+    * a pass over the named queries (each run once, in order, evaluating
+    * every output column). After a cold and a warm pass it prints each
+    * query's entries measured alone from an empty cache, the whole
+    * pass's entries the same way, and the compilations of two further
+    * passes on the cache as the pass left it, at this JVM's
+    * `spark.sql.codegen.cache.maxEntries`. */
+  private def codegen(spark: SparkSession, args: Array[String]): Unit = {
+    import CodegenWorkingSet.{Entries, measure}
+    val Array(sfDir, names) = args.take(2)
+    def run(n: String): Unit =
+      CodegenWorkingSet.touchAll(graft.SparkEntry.queries(n)(spark, sfDir))
+    def pass(): Unit = names.split(",").foreach(run)
+    def show(label: String, e: Entries): Unit =
+      println(f"$label%-28s entries=${e.wholeStage + e.expression}%-3d " +
+        s"(whole-stage ${e.wholeStage}, expression ${e.expression}) " +
+        s"compiled=${e.compiled}")
+    pass(); pass()
+    names.split(",").foreach(n => show(n, measure(run(n))._2))
+    show("pass", measure(pass())._2)
+    for (i <- 1 to 2)
+      println(f"${s"pass+$i"}%-28s compiled=" +
+        CodegenWorkingSet.counting(pass())._2)
   }
 }

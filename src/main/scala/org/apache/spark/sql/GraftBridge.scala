@@ -57,6 +57,35 @@ object GraftBridge {
       .invoke(s.artifactManager)
       .asInstanceOf[java.util.concurrent.atomic.AtomicBoolean].get()
 
+  /** Spark's JVM-wide cache of compiled generated classes
+    * (`CodeGenerator.cache`, a private val, so read reflectively). Its
+    * keys are (class loader, generated source); its size bound is the
+    * static conf `spark.sql.codegen.cache.maxEntries`. */
+  private def codegenCache: org.apache.spark.util.NonFateSharingCache[_, _] = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val m = CodeGenerator.getClass.getDeclaredMethod("cache")
+    m.setAccessible(true)
+    m.invoke(CodeGenerator)
+      .asInstanceOf[org.apache.spark.util.NonFateSharingCache[_, _]]
+  }
+
+  /** Drop every compiled class from Spark's codegen cache: the next
+    * use of each generated class compiles it again. */
+  def invalidateCodegenCache(): Unit = codegenCache.invalidateAll()
+
+  /** The generated source of every class in Spark's codegen cache, one
+    * entry per (class loader, source) key. The Guava cache inside is a
+    * Scala-`protected` val, a public method in bytecode. */
+  def codegenCacheSources(): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeAndComment
+    classOf[org.apache.spark.util.NonFateSharingCache[_, _]]
+      .getMethod("cache").invoke(codegenCache)
+      .asInstanceOf[org.sparkproject.guava.cache.Cache[_, _]]
+      .asMap().keySet().asScala.toSeq
+      .collect { case (_, code: CodeAndComment) => code.body }
+  }
+
   /** The analyzed logical plan backing a DataFrame. */
   def analyzedPlan(df: Dataset[_]):
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

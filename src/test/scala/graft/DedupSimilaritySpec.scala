@@ -246,6 +246,25 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(native.values.forall(c => c >= 0 && c < 16))
   }
 
+  test("native probeCells == composed array_sort ranking on fixture vectors") {
+    // the probe ranking decides every sim_ann_batch candidate pool and
+    // the streaming server's, so the native form must rank exactly like
+    // the composed one, slice semantics (nProbe above k) included
+    val e = SimilarityQueries.rawVecs(spark, sf001)
+    val centroids = SimilarityQueries.ivfModel(spark, sf001)
+    Seq(1, 4, 16, 20).foreach { n =>
+      val r = e.select(col("vec_id"),
+          SimilarityQueries.probeCells(col("v"), centroids, n).as("native"),
+          SimilarityQueries.probeCellsComposed(col("v"), centroids, n)
+            .as("composed"))
+        .as[(Long, Seq[Int], Seq[Int])].collect()
+      assert(r.nonEmpty)
+      r.foreach { case (id, native, composed) =>
+        assert(native == composed, s"vec $id, nProbe $n") }
+      assert(r.forall(_._2.size == math.min(n, centroids.size)))
+    }
+  }
+
   test("banded KNN join: full coverage and high agreement with exact NN") {
     val exact = SimilarityQueries.queries("sim_nn_cross_label")(spark, sf001)
       .select("qid", "nn_id").as[(Long, Long)].collect().toMap

@@ -58,7 +58,7 @@ class MinHashBandsSpec extends SparkSpec {
     assert(r._4.isEmpty)
   }
 
-  test("dedup_minhash_lsh work: 9 jobs per execution, only the candidate pairs persisted") {
+  test("dedup_minhash_lsh work: 7 jobs per execution, only the candidate pairs persisted") {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -77,7 +77,7 @@ class MinHashBandsSpec extends SparkSpec {
       r
     } finally sc.removeSparkListener(listener)
     assert(rows.nonEmpty)
-    assert(jobs.get == 9, s"jobs=${jobs.get}")
+    assert(jobs.get == 7, s"jobs=${jobs.get}")
     val persisted = sc.getPersistentRDDs.filter { case (id, _) =>
       !before.contains(id) }.values.toSeq
     assert(persisted.size == 1, persisted.map(_.toString))

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.sink.FileDocumentStoreFactory
 import graft.streaming.{LocalCheckpointFileManager, StreamingJobs}
+import graft.tools.CodegenWorkingSet
 import org.apache.spark.sql.GraftBridge
 
 /** graft's streaming queries run on the executors' shared class loader
@@ -37,7 +38,7 @@ class SharedClassLoaderSpec extends SparkSpec {
 
   /** One `wordCountToStore` query over `input` into a fresh store and
     * checkpoint: the store's collection and the compilations it made. */
-  private def wordCount() = codegenCompilations {
+  private def wordCount() = CodegenWorkingSet.counting {
     val factory = new FileDocumentStoreFactory(tempDir("graft-cl-store").toString)
     val lines = spark.readStream.option("maxFilesPerTrigger", "1")
       .text(input.toString).toDF("text")

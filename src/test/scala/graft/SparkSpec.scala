@@ -25,13 +25,4 @@ abstract class SparkSpec extends AnyFunSuite with TempDirs {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
   val sf01 = "/root/testdata/sf0.1"
-
-  /** `body`'s result and the generated classes Spark compiled while it
-    * ran. The counter is JVM-wide, so read it around one body only. */
-  def codegenCompilations[T](body: => T): (T, Long) = {
-    val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-    val before = h.getCount
-    val r = body
-    (r, h.getCount - before)
-  }
 }
