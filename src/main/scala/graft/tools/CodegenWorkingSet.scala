@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
 object CodegenWorkingSet {
 
   /** Classes Spark has compiled from generated code in this JVM. */
-  def compilations: Long =
+  private def compilations: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
       .getCount
 
