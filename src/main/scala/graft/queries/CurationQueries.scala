@@ -659,8 +659,7 @@ object CurationQueries {
         // one row per vector; referenced twice (survivor filter + final
         // verdict join) — the lazy checkpoint stops the second reference
         // re-running the whole SemDeDup subtree (r16 opt)
-        val sem = DedupQueries.queries("dedup_semantic")(s, d)
-          .lazyCheckpoint()
+        val sem = DedupQueries.semanticDups(e, centroids).lazyCheckpoint()
         val surv = sem.filter(!col("is_dup"))
           .select(col("vec_id"), col("cell"))
         val cdf = centroids.zipWithIndex.map { case (c, i) => (i, c) }

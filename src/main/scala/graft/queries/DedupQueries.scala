@@ -46,7 +46,11 @@ object DedupQueries {
     * That exchange is the one-time BUILD cost of the reusable index —
     * at 100 TB the index is a persisted table and this is its write. */
   private[graft] def shingleIndex(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
+    shingleIndex(Tables.documents(s, d))
+
+  /** [[shingleIndex]] over an already-loaded documents table. */
+  private[graft] def shingleIndex(documents: DataFrame): DataFrame =
+    documents
       .select(col("doc_id"), explode(shingles(col("text"), 3)).as("s"))
 
   /** Exact-jaccard pairs over a shingle index (doc_id, s): |A∩B| via
@@ -129,8 +133,12 @@ object DedupQueries {
     * (review-caught). This exchange materializes the index itself —
     * the one-time build cost of a reusable artifact, not a per-query
     * wide-payload shuffle. */
-  private[graft] def exactJaccardPairs(s: SparkSession, d: String): DataFrame = {
-    val sh = shingleIndex(s, d).buildCheckpointBy("doc_id")
+  private[graft] def exactJaccardPairs(s: SparkSession, d: String): DataFrame =
+    exactJaccardPairs(Tables.documents(s, d))
+
+  /** [[exactJaccardPairs]] over an already-loaded documents table. */
+  private[graft] def exactJaccardPairs(documents: DataFrame): DataFrame = {
+    val sh = shingleIndex(documents).buildCheckpointBy("doc_id")
     exactJaccardOn(sh, pruneSingletons = singletonPruningPaysOff(sh))
   }
 
@@ -827,7 +835,8 @@ object DedupQueries {
     // delta doc: near-dup of base (jaccard ≥ 0.8), near-dup of an
     // earlier delta doc, or genuinely new.
     "dedup_incremental" -> ((s, d) => {
-      val idx = Tables.documents(s, d)
+      val docs = Tables.documents(s, d)
+      val idx = docs
         .select(col("doc_id"), (col("source") === "src0").as("in_base"),
           explode(shingles(col("text"), 3)).as("s"))
         // index-build exchange: consumers run at the checkpoint's
@@ -858,7 +867,7 @@ object DedupQueries {
         bool_or(col("nbr_base")).as("dup_vs_base"),
         bool_or(!col("nbr_base") && col("nbr") < col("doc_id"))
           .as("dup_in_delta"))
-      Tables.documents(s, d).filter(col("source") =!= "src0")
+      docs.filter(col("source") =!= "src0")
         .select(col("doc_id"))
         .join(verdict, Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -879,8 +888,9 @@ object DedupQueries {
     // at sf0.1) after texts are joined back by doc_id — never as a
     // pairwise text join.
     "dedup_editdist" -> ((s, d) => {
-      val texts = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val cand = exactJaccardPairs(s, d)
+      val docs = Tables.documents(s, d)
+      val texts = docs.select(col("doc_id"), col("text"))
+      val cand = exactJaccardPairs(docs)
         .filter(col("jaccard") >= 0.5)
         .select("doc_a", "doc_b")
       cand
@@ -1073,33 +1083,38 @@ object DedupQueries {
     // Rows whose assignment is undefined (wholly-NULL / degenerate
     // vector → NULL cell) are excluded in BOTH engines, per the
     // ivfChainSql degenerate-row doctrine.
-    "dedup_semantic" -> ((s, d) => {
-      val e = SimilarityQueries.rawVecs(s, d)
-      val centroids = SimilarityQueries.ivfModel(s, d)
-      if (centroids.isEmpty)
-        e.select(col("vec_id"), lit(0).as("cell"), lit(false).as("is_dup"))
-          .limit(0)
-      else {
-        val a = SimilarityQueries.assignCells(e, centroids)
-          .filter(col("cell").isNotNull)
-          .select(col("vec_id"),
-            graft.functions.UnitNormalize.unit(col("v")).as("u"),
-            col("cell"))
-          .buildCheckpoint() // three consumers: both self-join sides + output spine
-        val prior = a.toDF("prior_id", "prior_u", "prior_cell")
-        val dupIds = a.join(prior,
-            col("prior_cell") === col("cell") &&
-              col("prior_id") < col("vec_id") &&
-              VectorFunctions.dot(col("u"), col("prior_u")) >=
-                SemThreshold,
-            "left_semi")
-          .select(col("vec_id"))
-        a.select(col("vec_id"), col("cell"))
-          .join(dupIds.withColumn("is_dup", lit(true)), Seq("vec_id"), "left")
-          .select(col("vec_id"), col("cell"),
-            coalesce(col("is_dup"), lit(false)).as("is_dup"))
-      }
-    }))
+    "dedup_semantic" -> ((s, d) =>
+      semanticDups(SimilarityQueries.rawVecs(s, d),
+        SimilarityQueries.ivfModel(s, d))))
+
+  /** dedup_semantic's verdict (vec_id, cell, is_dup) over `rawVecs`
+    * output and the IVF model, so curate_d4 can share one embeddings
+    * read with it. */
+  private[graft] def semanticDups(
+      e: DataFrame, centroids: Seq[Seq[Double]]): DataFrame =
+    if (centroids.isEmpty)
+      e.select(col("vec_id"), lit(0).as("cell"), lit(false).as("is_dup"))
+        .limit(0)
+    else {
+      val a = SimilarityQueries.assignCells(e, centroids)
+        .filter(col("cell").isNotNull)
+        .select(col("vec_id"),
+          graft.functions.UnitNormalize.unit(col("v")).as("u"),
+          col("cell"))
+        .buildCheckpoint() // three consumers: both self-join sides + output spine
+      val prior = a.toDF("prior_id", "prior_u", "prior_cell")
+      val dupIds = a.join(prior,
+          col("prior_cell") === col("cell") &&
+            col("prior_id") < col("vec_id") &&
+            VectorFunctions.dot(col("u"), col("prior_u")) >=
+              SemThreshold,
+          "left_semi")
+        .select(col("vec_id"))
+      a.select(col("vec_id"), col("cell"))
+        .join(dupIds.withColumn("is_dup", lit(true)), Seq("vec_id"), "left")
+        .select(col("vec_id"), col("cell"),
+          coalesce(col("is_dup"), lit(false)).as("is_dup"))
+    }
 
   /** Embeddings normalized to unit vectors — (vec_id, u). Normalize once
     * per vector, so every pair costs ONE dot product instead of three.

@@ -446,9 +446,10 @@ object ExtraRelationalQueries {
     // half-open interval semantics (incl. empty intervals at equal-us
     // boundaries) is explicit in the predicate.
     "q72_pit_join" -> ((s, d) => {
-      val facts = Tables.events(s, d)
+      val events = Tables.events(s, d)
+      val facts = events
         .filter(col("event_type") === "purchase" && col("ts").isNotNull)
-      pitLookup(facts, scd2PitDim(Tables.events(s, d)))
+      pitLookup(facts, scd2PitDim(events))
     }),
 
     // MERGE INTO / upsert semantics (the lakehouse write path, SQL:2003
@@ -782,13 +783,14 @@ object ExtraRelationalQueries {
     // is a BroadcastNestedLoopJoin evaluating |orders|·|watch|
     // conditions; this is O(Σ|basket|) + a broadcast hash probe.
     "q80_tag_join" -> ((s, d) => {
+      val part = Tables.part(s, d)
       val baskets = Tables.lineitem(s, d)
-        .join(broadcast(Tables.part(s, d)
+        .join(broadcast(part
           .select(col("p_partkey"), col("p_brand"))),
           col("l_partkey") === col("p_partkey"))
         .groupBy(col("l_orderkey"))
         .agg(collect_set(col("p_brand")).as("tags"))
-      val watch = Tables.part(s, d).filter(col("p_size") === 50)
+      val watch = part.filter(col("p_size") === 50)
         .select(col("p_brand").as("brand")).distinct()
       baskets
         .select(col("l_orderkey"), explode(col("tags")).as("brand"))

@@ -44,8 +44,9 @@ object MiscQueries {
     // keeps the oracle binding. All profiled columns are numeric, so
     // min/max cast to double losslessly (bigints ≪ 2^53).
     "stats_table_profile" -> ((s, d) => {
+      val li = Tables.lineitem(s, d)
       profiledColumns.map { c =>
-        Tables.lineitem(s, d).select(col(c).as("v"))
+        li.select(col(c).as("v"))
           .agg(count(lit(1)).as("n_rows"),
             sum(when(col("v").isNull, 1L).otherwise(0L)).as("n_nulls"),
             countDistinct(col("v")).as("n_distinct"),
@@ -348,7 +349,9 @@ object MiscQueries {
     // to a table adds a column to its existing pass, not a new scan.
     "dq_constraints" -> ((s, d) => {
       def viol(c: Column): Column = sum(when(c, 1L).otherwise(0L))
-      val li = Tables.lineitem(s, d).agg(
+      val lineitem = Tables.lineitem(s, d)
+      val orders = Tables.orders(s, d)
+      val li = lineitem.agg(
         count(lit(1)).as("total"),
         viol(col("l_discount") < 0 || col("l_discount") > 0.1)
           .as("v_disc"),
@@ -362,7 +365,7 @@ object MiscQueries {
           "stack(5, 'range_discount', v_disc, 'range_quantity', v_qty, " +
             "'accepted_returnflag', v_rf, 'completeness_shipdate', v_sd, " +
             "'unique_line', v_uni) AS (chk, violations)"), col("total"))
-      val ord = Tables.orders(s, d).agg(
+      val ord = orders.agg(
         count(lit(1)).as("total"),
         viol(col("o_orderpriority").isNull ||
           !col("o_orderpriority").rlike("^[1-5]-")).as("v_pri"),
@@ -399,9 +402,9 @@ object MiscQueries {
           .select(lit(tblName).as("tbl"), lit(chkName).as("chk"),
             col("violations"), col("total"))
       val ris =
-        ri(Tables.orders(s, d), "o_custkey", Tables.customer(s, d),
+        ri(orders, "o_custkey", Tables.customer(s, d),
           "c_custkey", "orders", "ri_custkey") unionAll
-          ri(Tables.lineitem(s, d), "l_orderkey", Tables.orders(s, d),
+          ri(lineitem, "l_orderkey", orders,
             "o_orderkey", "lineitem", "ri_orderkey")
       li.select("tbl", "chk", "violations", "total")
         .unionAll(ord.select("tbl", "chk", "violations", "total"))

@@ -339,7 +339,7 @@ object SimilarityQueries {
     //     instead of silently vanishing.
     // Approximate (IVF probes miss cells) ⇒ rows-only; per-query recall
     // vs brute force + coverage pinned in DedupSimilaritySpec.
-    "sim_ann_batch" -> ((s, d) => annBatch(s, d, nProbe = 4)),
+    "sim_ann_batch" -> ((s, d) => annBatch(Tables.embeddings(s, d), d, nProbe = 4)),
 
     // ANN quality evaluation — recall@10 and reciprocal rank of the
     // batched IVF path against the exact ground truth, per query: the
@@ -367,7 +367,8 @@ object SimilarityQueries {
       // lazy checkpoint stops the second reference re-expanding (and
       // re-running) the ENTIRE annBatch serving plan, which alone halves
       // this query's 200 KB formatted plan (r16 opt)
-      val ann = annBatch(s, d, nProbe = 4).lazyCheckpoint()
+      val emb = Tables.embeddings(s, d)
+      val ann = annBatch(emb, d, nProbe = 4).lazyCheckpoint()
       // GT pair-join parallelism floor (r17, measured at sf1): the
       // corpus side arrives as scan splits — 2 tasks on the single-file
       // fixture — while the exact ground truth multiplies every corpus
@@ -378,8 +379,8 @@ object SimilarityQueries {
       // scale the scan is already split and no bytes move. (The rawVecs
       // no-repartition rule is right for every LINEAR consumer; this
       // quadratic one is the documented exception.)
-      val e = graft.operators.Parallelism.floor(rawVecs(s, d))
-      val qset = Tables.embeddings(s, d).filter(col("label") === 0)
+      val e = graft.operators.Parallelism.floor(rawVecs(emb))
+      val qset = emb.filter(col("label") === 0)
         .select(col("vec_id").as("qid"),
           col("embedding").cast("array<double>").as("q_v"))
       val wq = Window.partitionBy("qid")
@@ -612,13 +613,14 @@ object SimilarityQueries {
     * monotone by construction, since probeCells(n) is a prefix of
     * probeCells(n+1) and so candidate pools grow superset-wise; at
     * nProbe = k(cells) the pool is the whole corpus and recall is
-    * exactly 1.0). The registered query serves nProbe=4. */
+    * exactly 1.0). The registered query serves nProbe=4. `emb` is the
+    * embeddings table of `d` as the caller loaded it (each load infers
+    * the parquet schema in a job, so a query reads it once); `d` keys
+    * the IVF model memo. */
   private[graft] def annBatch(
-      s: SparkSession, d: String, nProbe: Int, k: Int = 10): DataFrame = {
-    // one read: each Tables.embeddings call infers the schema in a job
-    val emb = Tables.embeddings(s, d)
+      emb: DataFrame, d: String, nProbe: Int, k: Int = 10): DataFrame = {
     val e = rawVecs(emb)
-    val centroids = ivfModel(s, d)
+    val centroids = ivfModel(emb.sparkSession, d)
     if (centroids.isEmpty) {
       // empty corpus -> no model and no queries; empty result with the
       // query's schema instead of an analysis-time crash

@@ -75,6 +75,22 @@ object QueryDebug {
     "(lambda \\w+?_)\\d+".r -> "$1N",
     "(/tmp/graft[a-z_-]*?)(?:_[0-9a-f]+_[0-9a-f]{32}|\\d+)".r -> "$1*")
 
+  /** A registered query's plan as `plans` writes it: built and planned
+    * with `spark.sql.maxMetadataStringLength` at its maximum, then
+    * masked (`planText(_, stable = true)`). Spark cuts each scan
+    * metadata value (`DataFilters`, `ReadSchema`, …) at that length when
+    * it plans the scan, before any mask can run, so at the default of
+    * 100 the cut moves with the digit count of the expression ids and
+    * lambda counters inside it. The session's value is restored after. */
+  private[graft] def stablePlan(
+      spark: SparkSession, name: String, sfDir: String): String = {
+    val key = "spark.sql.maxMetadataStringLength"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, Int.MaxValue.toString)
+    try planText(graft.SparkEntry.queries(name)(spark, sfDir), stable = true)
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** explainf <names,comma-sep> <outDir> <suffix> [sfDir]: writes each
     * query's `.explain("formatted")` output to <outDir>/<name>_<suffix>.txt
     * — the plans/r16 optimization-evidence artifact. */
@@ -295,8 +311,8 @@ object QueryDebug {
     "mm_pipeline_e2e" -> "composed multimodal pipeline over the REAL decode chain (round 15: corpus = text families + planted strict-PNM filmstrips with captions): gate + align screen are narrow projections over the checkpointed corpus; graft_phash genuinely decodes+DCTs conformers map-side; the pair join sees only gated+aligned (doc_id, sig) rows; per-frame hashBand perceptual hashes explode only for final survivors; verdict = three doc_id-keyed left joins",
     "stats_ks_drift" -> "exact KS drift, fully lazy: percentile_approx boundary array broadcast-crossed onto the distinct-value grid (no driver stats job at construction); running CDFs via broadcast bucket offsets + in-bucket windows")
 
-  /** plans <out.md> [sfDir]: writes every pick's executed plan, masked
-    * (`planText(_, stable = true)`), under its note, then carries over
+  /** plans <out.md> [sfDir]: writes every pick's executed plan
+    * ([[stablePlan]]) under its note, then carries over
     * verbatim everything from the hand-annotated marker on in the
     * existing <out.md> — condensed plan sketches, not regenerable dumps. */
   private def plans(spark: SparkSession, args: Array[String]): Unit = {
@@ -309,9 +325,8 @@ object QueryDebug {
       "Expression ids (`#N`), `plan_id`s and temp-directory suffixes (`*`) " +
       "are masked, so two runs over unchanged plans write the same file.\n")
     picks.foreach { case (name, note) =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name\n\n$note\n\n```\n")
-      sb.append(planText(df, stable = true))
+      sb.append(stablePlan(spark, name, sfDir))
       sb.append("\n```\n")
     }
     val marker = "<!-- HAND-ANNOTATED BELOW"

@@ -718,7 +718,7 @@ class DedupSimilaritySpec extends SparkSpec {
         .sortBy { case (id, c) => (-c, id) }.take(10).map(_._1).toSet
     }.toMap
     val curve = Seq(1, 2, 4, 8, 16).map { np =>
-      val got = SimilarityQueries.annBatch(spark, sf001, np)
+      val got = SimilarityQueries.annBatch(Tables.embeddings(spark, sf001), sf001, np)
         .filter(col("nn_id").isNotNull)
         .select("qid", "nn_id").as[(Long, Long)].collect()
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The program's entry points are a closed, documented set: the CLI,
   * Bench, Verify and the four dev tools. A new `main` in `src/main`
   * (an experiment that belongs in a scratch copy, not in the library)
-  * fails here until it is added to this list AND to README §7. */
+  * fails here until it is added to this list AND to README §7. The
+  * scripts under `tools/` are pinned the same way, against the verify
+  * notes that say how each one is run. */
 class EntryPointsSpec extends AnyFunSuite {
 
   private val expected = Set(
@@ -52,5 +54,23 @@ class EntryPointsSpec extends AnyFunSuite {
     val undocumented = expected.filterNot(section.contains)
     assert(undocumented.isEmpty,
       s"not listed in README section 7: ${undocumented.toSeq.sorted}")
+  }
+
+  private val expectedTools = Set("benchcheck.py", "bench_reference.json",
+    "check.py", "run.sh", "scalecheck.py")
+
+  test("tools/ holds exactly the documented scripts") {
+    val listing = Files.list(Paths.get("tools"))
+    val found =
+      try listing.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(_.getFileName.toString).toSet
+      finally listing.close()
+    assert(found == expectedTools,
+      s"unexpected: ${(found -- expectedTools).toSeq.sorted}; " +
+        s"missing: ${(expectedTools -- found).toSeq.sorted}")
+    val notes = Files.readString(Paths.get(".claude/skills/verify/SKILL.md"))
+    val undocumented = expectedTools.filterNot(notes.contains)
+    assert(undocumented.isEmpty,
+      s"not named in the verify notes: ${undocumented.toSeq.sorted}")
   }
 }

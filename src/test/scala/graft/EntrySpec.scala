@@ -1,10 +1,15 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
+
 /** Registry consistency: the driver contract in [[SparkEntry]] must stay
   * closed — every registered query either has a DuckDB oracle or a
   * declared rows-only pin, never neither (a silently unoracled query
   * would read as a perpetual failure in the correctness report) and
-  * never both (an oracle makes the rows-only marker a stale lie). */
+  * never both (an oracle makes the rows-only marker a stale lie). And
+  * building a query reads each table once. */
 class EntrySpec extends SparkSpec {
 
   test("every query has exactly one of: oracle SQL, rows-only pin") {
@@ -29,5 +34,39 @@ class EntrySpec extends SparkSpec {
       val suite = pin.takeWhile(_ != ' ')
       assert(suites.contains(suite), s"$q pinned by unknown suite '$suite'")
     }
+  }
+
+  test("building a query loads each table at most once") {
+    // every Tables.load infers the parquet schema in one job, whose call
+    // site is "parquet at Tables.scala" and whose stack names the table
+    // helper (Tables.documents, Tables.events, …) above Tables.load
+    val helper = """graft\.Tables\$\.(\w+)\(""".r
+    val loads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        j.stageInfos.filter(_.name.startsWith("parquet at Tables.scala"))
+          .foreach(st => loads.add(helper.findAllMatchIn(st.details)
+            .map(_.group(1)).find(_ != "load").getOrElse(st.details)))
+    }
+    def loadsDuring(build: => Any): Seq[String] = {
+      GraftBridge.drainListenerBus(spark, 10000)
+      loads.clear()
+      build
+      GraftBridge.drainListenerBus(spark, 10000)
+      loads.asScala.toSeq
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val repeated = try SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) =>
+        fn(spark, sf001) // warms the memos (IVF model, component labels, …)
+        val tables = loadsDuring(fn(spark, sf001))
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = false))
+        if (tables.distinct.size < tables.size)
+          Some(s"$name: ${tables.sorted.mkString(", ")}")
+        else None
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(repeated.isEmpty,
+      s"queries loading a table more than once:\n${repeated.mkString("\n")}")
   }
 }

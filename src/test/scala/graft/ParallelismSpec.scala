@@ -1,0 +1,51 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.functions.col
+import graft.operators.{Checkpoint, Parallelism}
+
+/** `Parallelism.floor` reads the partition count from `df.rdd`, which
+  * under AQE runs the upstream stages of any exchange in the frame. Its
+  * contract is a scan or a checkpoint; anything else is refused before a
+  * job starts. */
+class ParallelismSpec extends SparkSpec {
+
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    GraftBridge.drainListenerBus(spark, 10000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      GraftBridge.drainListenerBus(spark, 10000)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def grouped: DataFrame =
+    Tables.embeddings(spark, sf0001).groupBy("label").count()
+
+  test("a frame with an exchange is refused before any job starts") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val frame = grouped
+    val (err, jobs) = jobsDuring(
+      intercept[IllegalArgumentException](Parallelism.floor(frame)))
+    assert(err.getMessage.contains("scan or a checkpoint"), err.getMessage)
+    assert(jobs == 0, s"$jobs job(s) started")
+  }
+
+  test("a scan frame and a checkpoint frame pass") {
+    val n = GraftBridge.shufflePartitions(spark)
+    val scan = Tables.embeddings(spark, sf0001).select(col("vec_id"))
+    assert(Parallelism.floor(scan).rdd.getNumPartitions >= n)
+    val checkpointed = Checkpoint(grouped)
+    assert(Parallelism.floor(checkpointed).count() ==
+      grouped.count())
+  }
+}
