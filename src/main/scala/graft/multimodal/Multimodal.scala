@@ -1,7 +1,6 @@
 package graft.multimodal
 
 import graft.Tables
-import graft.operators.Checkpoint.CheckpointOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -570,7 +569,7 @@ object Multimodal {
       val meta = aug.unionAll(pnmFamiliesWithText(docs))
         .withColumn("nb", octet_length(col("payload")))
         .withColumn("passed_media", col("nb") >= 64 && col("nb") % 10 >= 1)
-        .buildCheckpoint() // every stage derives map-side from this seam
+        .localCheckpoint() // every stage derives map-side from this seam
       val gated = meta.filter(col("passed_media"))
       // pipeline_e2e's narrow-exchange discipline: payloads NEVER enter a
       // join — each stage derives its narrow rows (sig / frame rows)

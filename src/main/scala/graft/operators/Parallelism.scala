@@ -29,7 +29,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
   */
 object Parallelism {
   def floor(df: DataFrame): DataFrame = {
-    require(!hasExchange(df.queryExecution.executedPlan),
+    require(exchanges(df.queryExecution.executedPlan).isEmpty,
       "Parallelism.floor takes a scan or a checkpoint: this frame's plan " +
         "contains an exchange, whose stages reading its partition count " +
         "would run now and again in the consuming query")
@@ -37,13 +37,20 @@ object Parallelism {
     if (df.rdd.getNumPartitions >= n) df else df.repartition(n)
   }
 
-  /** Whether `plan` holds an exchange or a query stage, in subqueries
-    * too. An AQE root is a leaf whose current plan (before execution:
-    * the input plan with the exchanges EnsureRequirements adds) is walked
-    * explicitly; its `inputPlan` alone would miss those exchanges. */
-  private def hasExchange(plan: SparkPlan): Boolean = plan match {
-    case a: AdaptiveSparkPlanExec => hasExchange(a.executedPlan)
-    case _: Exchange | _: QueryStageExec => true
-    case p => p.children.exists(hasExchange) || p.subqueries.exists(hasExchange)
+  /** Every exchange in `plan`, subqueries included. An AQE root is a
+    * leaf whose current plan is walked explicitly: before execution that
+    * is the input plan with the exchanges EnsureRequirements adds (its
+    * `inputPlan` alone has none of them), after execution the final plan,
+    * whose query stages are leaves wrapping their exchange. A reused
+    * exchange is not walked: the exchange it reuses is in the plan. */
+  private[graft] def exchanges(plan: SparkPlan): Seq[Exchange] = plan match {
+    case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+    case q: QueryStageExec => exchanges(q.plan)
+    case p =>
+      val below = (p.children ++ p.subqueries).flatMap(exchanges)
+      p match {
+        case e: Exchange => e +: below
+        case _ => below
+      }
   }
 }

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.Checkpoint.CheckpointOps
 import graft.functions.CountMinAggregator
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -273,7 +272,7 @@ object CorpusQueries {
           Window.partitionBy("source").orderBy(col("h").asc)))
         .filter(col("rn") <= k)
         .select(col("source"), col("h"))
-        .lazyCheckpoint()
+        .localCheckpoint(eager = false)
       val srcs = km.select(col("source")).distinct()
       val pairs = broadcast(srcs.select(col("source").as("src_a"))
         .join(srcs.select(col("source").as("src_b")),

@@ -134,7 +134,7 @@ object CurationQueries {
         .join(broadcast(bandsOf(benchSh, "bench_id")),
           Seq("band_idx", "band_hash"))
         .select("doc_id", "bench_id").distinct()
-        .buildCheckpoint() // feeds the doc semi-join, pair semi-join
+        .localCheckpoint() // feeds the doc semi-join, pair semi-join
       val aSizes = corpusSh.groupBy("doc_id").agg(count(lit(1)).as("na"))
       val bSizes = benchSh.groupBy("bench_id").agg(count(lit(1)).as("nb"))
       val inter = corpusSh
@@ -273,9 +273,9 @@ object CurationQueries {
       // token side. Without it each would re-shuffle every EXPLODED
       // (doc_id, pos, tok) row — strictly more bytes than the one
       // token-array pass (review round 5 caught exactly that
-      // regression). The build-plan audit walk sees this exchange (round
-      // 6: inlineForAudit skips the checkpoint) — its justification is
-      // the ta_boilerplate allowlist entry in QueryDebug.audit.
+      // regression). The audit sees this exchange in the checkpoint's
+      // own executed plan — its justification is the ta_boilerplate
+      // allowlist entry in QueryDebug.audit.
       val docs = Tables.documents(s, d)
         .withColumn("w", tokens(col("text")))
         .select("doc_id", "w")
@@ -348,7 +348,7 @@ object CurationQueries {
           // every downstream boolean stays two-valued (RobustnessSpec)
           coalesce(n >= 30 && n <= 80 && stopHits >= 1, lit(false))
             .as("passed_quality"))
-        .buildCheckpoint() // feeds stage 2 and the final verdict join
+        .localCheckpoint() // feeds stage 2 and the final verdict join
       // stage 2, NARROW: only (doc_id, fp) rows ever cross an exchange.
       // The former form computed the same window but carried full text
       // through it as payload (stage 3 read text off this checkpoint) —
@@ -361,7 +361,7 @@ object CurationQueries {
         .withColumn("exact_canonical",
           min(col("doc_id")).over(Window.partitionBy("fp")))
         .select("doc_id", "exact_canonical")
-        .buildCheckpoint() // feeds stage 3 and the final verdict join
+        .localCheckpoint() // feeds stage 3 and the final verdict join
       // stage 3: shingle the passers map-side off the checkpointed texts,
       // THEN semi-join to the canonical ids — (doc_id, s) index rows cross
       // the wire, text never does. Shingling non-canonical passers is
@@ -604,7 +604,7 @@ object CurationQueries {
           pmod(conv(substring(md5(col("f").cast("binary")), 1, 8), 16, 10)
             .cast("long"), lit(64L)).as("b"))
         .distinct()
-        .buildCheckpoint() // 2 preds + 2 grads + final scoring reuse it
+        .localCheckpoint() // 2 preds + 2 grads + final scoring reuse it
       val y = docs.select(col("doc_id"),
         when(col("source") === "src0", 1.0).otherwise(0.0).as("y"))
       val n = feats.agg(countDistinct(col("doc_id")).as("n"))
@@ -659,7 +659,8 @@ object CurationQueries {
         // one row per vector; referenced twice (survivor filter + final
         // verdict join) — the lazy checkpoint stops the second reference
         // re-running the whole SemDeDup subtree (r16 opt)
-        val sem = DedupQueries.semanticDups(e, centroids).lazyCheckpoint()
+        val sem = DedupQueries.semanticDups(e, centroids)
+          .localCheckpoint(eager = false)
         val surv = sem.filter(!col("is_dup"))
           .select(col("vec_id"), col("cell"))
         val cdf = centroids.zipWithIndex.map { case (c, i) => (i, c) }
@@ -795,7 +796,7 @@ object CurationQueries {
         // linear state, the same discipline as the dedup index builds;
         // at 100 TB the featurize-once shape is what DSIR
         // implementations do anyway.
-        .buildCheckpoint()
+        .localCheckpoint()
       val stats = feats.groupBy("b").agg(
         count(lit(1)).as("r"),
         sum(when(col("source") === "src0", 1L).otherwise(0L)).as("t"))
@@ -822,7 +823,7 @@ object CurationQueries {
         // this pile of fixed-cost re-evaluation jobs (the corpus is far
         // too small for the hashing itself to matter), which contention
         // multiplies. Score once, rank the checkpoint.
-        .buildCheckpoint()
+        .localCheckpoint()
       val ranked = ExtraRelationalQueries.globalRowNumber(
           scored, 32, "dsir_score", firstAsc = false,
           col("dsir_score").desc, col("doc_id").asc)

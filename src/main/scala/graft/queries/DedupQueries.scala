@@ -75,7 +75,7 @@ object DedupQueries {
     // (na and nb joins) — lazy checkpoint so the second reference reads
     // the materialized rows instead of re-scanning the index (r16 opt)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .lazyCheckpoint()
+      .localCheckpoint(eager = false)
     val joinSide =
       if (pruneSingletons) {
         val df2 = sh.groupBy("s").agg(count(lit(1)).as("df"))
@@ -200,7 +200,7 @@ object DedupQueries {
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
       .distinct()
-      .buildCheckpoint() // candDocs + the verification join
+      .localCheckpoint() // candDocs + the verification join
     val candDocs = cand.select(col("doc_a").as("doc_id"))
       .union(cand.select(col("doc_b").as("doc_id"))).distinct()
     val candSh = sh
@@ -250,14 +250,6 @@ object DedupQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def componentLabels(
       s: SparkSession, d: String): DataFrame = {
-    // Audit mode inspects PLANS without executing them; building the
-    // memo would EXECUTE the poisoned one-round audit plan. Return the
-    // inline fixpoint plan instead so the shuffle walk still sees the
-    // exchanges under the checkpoint seams.
-    if (graft.operators.Checkpoint.inlineForAudit)
-      return connectedComponents(exactJaccardPairs(s, d)
-        .filter(col("jaccard") >= JaccardThreshold)
-        .select("doc_a", "doc_b")).toDF("doc_id", "cluster")
     val p = ccLabelsBuilt.computeIfAbsent(d, _ => {
       val pairs = exactJaccardPairs(s, d)
         .filter(col("jaccard") >= JaccardThreshold)
@@ -351,24 +343,6 @@ object DedupQueries {
         .select(col("id"), col("old_label"),
           least(col("mid"), coalesce(col("jump"), col("mid"))).as("label"))
     }
-    // Audit mode: return ONE unexecuted iteration instead of running the
-    // fixpoint loop. With checkpoints inlined the loop would (a) grow the
-    // walked plan per round and (b) re-execute the whole un-materialized
-    // upstream pipeline on every convergence count() — the review-caught
-    // audit-mode trap. One iteration's plan carries everything the walk
-    // needs: the full upstream build lineage (edges/labels are inline
-    // here) plus the loop body's join + min-aggregate + jump exchanges,
-    // which are round-invariant (each round shuffles the same (id, label)
-    // shape). Production runs the loop exactly as before. The label
-    // column is POISONED (Checkpoint.poison): one round's labels are
-    // unconverged, so executing this plan — a result-running audit, or a
-    // leaked un-reset flag — must throw, not silently return wrong
-    // clusters (review-caught; AuditSpec pins the throw).
-    if (graft.operators.Checkpoint.inlineForAudit)
-      return round(labels).select(col("id"),
-        graft.operators.Checkpoint.poison(col("label"),
-          "connectedComponents audit-mode plan is ONE unconverged round")
-          .as("label"))
     // Convergence count folded into the checkpoint materialization
     // (r17 opt, VERDICT item 1): one job per round instead of
     // checkpoint + a second full filter/count pass over the rows it
@@ -485,7 +459,7 @@ object DedupQueries {
       val sh = shingleIndex(s, d).buildCheckpointBy("doc_id")
       // read twice by the verify tail — lazy checkpoint (r16 opt)
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-        .lazyCheckpoint()
+        .localCheckpoint(eager = false)
       // the jaccard family's adaptive df≥2 pruning applies verbatim:
       // a df=1 shingle joins with nothing, and sizes always count the
       // FULL sets — exactness preserved, measured 2× at sf1 where the
@@ -532,14 +506,14 @@ object DedupQueries {
       // more than the exchanges they remove at every size measured,
       // unlike the minhash/pagerank sites where the stamp pays.
       val sh = shingleIndex(s, d).repartition(col("doc_id"))
-        .buildCheckpoint()
+        .localCheckpoint()
       // sizes: ~|docs| rows, read twice by the verify tail; dfreq:
       // vocab-sized, read twice (prefix broadcast + the df≥2 filter) —
       // lazy checkpoints so neither re-aggregates the index (r16 opt)
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-        .lazyCheckpoint()
+        .localCheckpoint(eager = false)
       val dfreq = sh.groupBy("s").agg(count(lit(1)).as("df"))
-        .lazyCheckpoint()
+        .localCheckpoint(eager = false)
       val wDoc = Window.partitionBy("doc_id")
       // rank over the FULL set (positions in the pigeonhole argument are
       // full-set positions; n from the same window), then drop df=1 —
@@ -557,7 +531,7 @@ object DedupQueries {
       // sh site above (r17 sf1 A/B; r16 had measured the always-on
       // stamp at +0.4 s at bench scale for the same reason)
       val full = sh.join(df2, Seq("s"), "left_semi").select("doc_id", "s")
-        .buildCheckpoint() // candidate probe + verification both read it
+        .localCheckpoint() // candidate probe + verification both read it
       val cand = prefixed.toDF("doc_a", "s")
         .join(full.toDF("doc_b", "s"), "s")
         .filter(col("doc_a") =!= col("doc_b"))
@@ -767,7 +741,7 @@ object DedupQueries {
         .agg(collect_list("doc_id").as("ids"))
         .select(inline(OrderedPairs(col("ids"), "doc_a", "doc_b")))
         .distinct()
-        .buildCheckpoint() // candDocs + the verification join
+        .localCheckpoint() // candDocs + the verification join
       // a semi-join ignores duplicate keys: no union, no distinct
       val candDocs = cand.select(
         explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
@@ -1101,7 +1075,7 @@ object DedupQueries {
         .select(col("vec_id"),
           graft.functions.UnitNormalize.unit(col("v")).as("u"),
           col("cell"))
-        .buildCheckpoint() // three consumers: both self-join sides + output spine
+        .localCheckpoint() // three consumers: both self-join sides + output spine
       val prior = a.toDF("prior_id", "prior_u", "prior_cell")
       val dupIds = a.join(prior,
           col("prior_cell") === col("cell") &&
@@ -1128,7 +1102,7 @@ object DedupQueries {
     Tables.embeddings(s, d)
       .select(col("vec_id"),
         graft.functions.UnitNormalize.unit(col("embedding")).as("u"))
-      .buildCheckpoint() // both self-join sides, in two queries
+      .localCheckpoint() // both self-join sides, in two queries
 
   /** Shared SimHash pipeline over pre-hashed tokens (doc_id, h):
     * per-doc signature via the ±1 bit-vote aggregator, candidate pairs by
@@ -1204,7 +1178,7 @@ object DedupQueries {
     * skew-guarded plan; see [[HotPieceThreshold]]. */
   private[graft] def signaturePairs(sigsIn: DataFrame): DataFrame = {
     val sigs =
-      sigsIn.buildCheckpoint() // both sides of the piece-blocked self-join
+      sigsIn.localCheckpoint() // both sides of the piece-blocked self-join
     val pieces = sigs.select(col("doc_id"), col("sig"),
       posexplode(transform(sequence(lit(0), lit(3)), p =>
         call_function("shiftright", col("sig"), (p * 16).cast("int"))
@@ -1269,7 +1243,7 @@ object DedupQueries {
         val hotCap = sigs.sparkSession.conf
           .getOption("graft.signaturePairs.hotListBroadcastCap")
           .flatMap(_.toLongOption).getOrElse(HotListBroadcastCap)
-        val hotCk = hot.buildCheckpoint()
+        val hotCk = hot.localCheckpoint()
         // the broadcast decision must NOT rest on a possibly-stale
         // memoized nHot: if the underlying table grew after the memo
         // entry was cached, a small stale count would broadcast a hot

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.Checkpoint.CheckpointOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -75,10 +74,10 @@ object ExtraRelationalQueries {
     // by the ranked side, the offsets side, and any consumer that
     // re-executes the frame (round-11: it re-ran per evaluation,
     // q54 0.56→0.77 s).
-    val boundsRow = graft.operators.Checkpoint.lazily(
-      keyed.agg(array_sort(array_distinct(
+    val boundsRow = keyed.agg(array_sort(array_distinct(
         percentile_approx(col("__grn_key"), typedLit(probs), lit(100))))
-        .as("__grn_bnds")))
+        .as("__grn_bnds"))
+      .localCheckpoint(eager = false)
     // Lazily checkpoint the bucketed rows (r17): the ranked side and
     // the offsets side both consume this frame, and the offsets side —
     // built first, as the broadcast join's build job — otherwise
@@ -86,11 +85,11 @@ object ExtraRelationalQueries {
     // side then runs AGAIN. First execution materializes once (narrow
     // key columns only at every call site), the other side reads the
     // materialized rows: one input scan instead of two per evaluation.
-    val bucketed = graft.operators.Checkpoint.lazily(
-      keyed.crossJoin(broadcast(boundsRow))
-        .withColumn("__grn_bucket",
-          size(filter(col("__grn_bnds"), b => col("__grn_key") > b)))
-        .drop("__grn_bnds"))
+    val bucketed = keyed.crossJoin(broadcast(boundsRow))
+      .withColumn("__grn_bucket",
+        size(filter(col("__grn_bnds"), b => col("__grn_key") > b)))
+      .drop("__grn_bnds")
+      .localCheckpoint(eager = false)
     val wIn = Window.partitionBy("__grn_bucket").orderBy(sortCols: _*)
     val ranked = bucketed.withColumn("__grn_rn", row_number().over(wIn))
     // per-bucket sizes -> cumulative offsets (windows here run over

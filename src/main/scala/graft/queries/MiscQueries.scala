@@ -150,7 +150,7 @@ object MiscQueries {
             .cast(DecimalType(38, 0))).as(s"s_$a$b") }
       val row1 = Tables.lineitem(s, d)
         .agg(count(lit(1)).as("n"), sumCols: _*)
-        .buildCheckpoint()
+        .localCheckpoint()
       val nD = col("n").cast(DecimalType(38, 0))
       def covNum(a: String, b: String): Column = {
         val key = if (keys.indexOf(a) <= keys.indexOf(b)) s"$a$b" else s"$b$a"
@@ -201,7 +201,7 @@ object MiscQueries {
         .select(col("event_type"), col("value"))
       val pv = ev.groupBy(col("event_type").as("t"), col("value").as("x"))
         .agg(count(lit(1)).as("c"))
-        .buildCheckpoint() // re-read by the ref slice and the cmp slice
+        .localCheckpoint() // re-read by the ref slice and the cmp slice
       val refC = pv.filter(col("t") === refType)
         .select(col("x"), col("c").as("c1"))
       val cmp = pv.filter(col("t") =!= refType)
@@ -226,7 +226,7 @@ object MiscQueries {
         .withColumn("b",
           size(filter(col("__bnds"), bb => col("x") > bb)))
         .drop("__bnds")
-        .buildCheckpoint() // re-read by the offsets pass and the scan
+        .localCheckpoint() // re-read by the offsets pass and the scan
       val wB = Window.partitionBy("t").orderBy("b")
       val whole = wB.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing)
@@ -295,14 +295,15 @@ object MiscQueries {
           col("l_partkey") === col("p_partkey"))
         .select(col("l_orderkey").as("oid"), col("p_brand").as("item"))
         .distinct()
-        .buildCheckpoint()
-      val nb = b.agg(countDistinct(col("oid")).as("nb")).lazyCheckpoint()
+        .localCheckpoint()
+      val nb = b.agg(countDistinct(col("oid")).as("nb"))
+        .localCheckpoint(eager = false)
       def freq(df: DataFrame, keys: Seq[String]): DataFrame =
         df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("sup"))
           .crossJoin(broadcast(nb))
           .filter(col("sup") * 10000L >= lit(10L) * col("nb"))
           .select(keys.map(col) :+ col("sup"): _*)
-      val l1 = freq(b, Seq("item")).lazyCheckpoint()
+      val l1 = freq(b, Seq("item")).localCheckpoint(eager = false)
       // one row per basket: the sorted L1-surviving item set (items are
       // distinct within a basket by the distinct() above, so i < j in
       // the sorted array IS the item_i < item_j pair orientation)
@@ -316,7 +317,7 @@ object MiscQueries {
             greatest(size(col("its")) - i - 1, lit(0))),
           y => struct(x.as("x"), y.as("y")))))).as("p"))
         .select(col("oid"), col("p.x").as("x"), col("p.y").as("y"))
-      val l2 = freq(p2, Seq("x", "y")).lazyCheckpoint()
+      val l2 = freq(p2, Seq("x", "y")).localCheckpoint(eager = false)
       val fp2 = p2.join(broadcast(l2.select("x", "y")), Seq("x", "y"),
         "left_semi")
       val tri = fp2.join(baskets, Seq("oid"))
@@ -449,7 +450,7 @@ object MiscQueries {
       val e = li.as("a").join(li.as("b"),
           expr("a.ok = b.ok AND a.pk < b.pk"))
         .select(col("a.pk").as("pu"), col("b.pk").as("pv")).distinct()
-        .buildCheckpoint() // scanned by degree, orientation, and close
+        .localCheckpoint() // scanned by degree, orientation, and close
       val deg = e.select(explode(array(col("pu"), col("pv"))).as("n"))
         .groupBy("n").agg(count(lit(1)).as("deg"))
       val ed = e
@@ -499,14 +500,14 @@ object MiscQueries {
       val e = li.as("a").join(li.as("b"),
           expr("a.ok = b.ok AND a.pk < b.pk"))
         .select(col("a.pk").as("pu"), col("b.pk").as("pv")).distinct()
-        .buildCheckpoint() // re-read by adjacency, anti-join
+        .localCheckpoint() // re-read by adjacency, anti-join
       val adj = e.select(col("pu").as("ctr"), col("pv").as("nb"))
         .unionAll(e.select(col("pv").as("ctr"), col("pu").as("nb")))
       val deg = adj.groupBy("ctr").agg(count(lit(1)).as("deg"))
         // lazy (r17): the eager form paid a dedicated materialization
         // job; the first broadcast build materializes it instead, the
         // other two reads reuse — one fewer driver job, same rows
-        .lazyCheckpoint() // ≤ |parts| rows; re-read 3×
+        .localCheckpoint(eager = false) // ≤ |parts| rows; re-read 3×
       val sm = adj.join(broadcast(deg.filter(col("deg") <= 64)), Seq("ctr"))
         .select("ctr", "nb")
       val cn = sm.as("x").join(sm.as("y"),

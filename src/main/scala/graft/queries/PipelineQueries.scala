@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions._
-import graft.operators.Checkpoint.CheckpointOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -192,9 +191,9 @@ object PipelineQueries {
         .select(col("doc_id"), col("lang"), h.as("hkey"))
         .withColumn("b",
           conv(substring(col("hkey"), 1, 2), 16, 10).cast("int"))
-        .buildCheckpoint() // re-read by the bucket-count and rank passes
+        .localCheckpoint() // re-read by the bucket-count and rank passes
       val bc = docs.groupBy("lang", "b").agg(count(lit(1)).as("c"))
-        .buildCheckpoint() // tiny; re-read by offsets and n_min
+        .localCheckpoint() // tiny; re-read by offsets and n_min
       val wB = Window.partitionBy("lang").orderBy("b")
       val offs = bc.select(col("lang"), col("b"),
         coalesce(sum(col("c")).over(

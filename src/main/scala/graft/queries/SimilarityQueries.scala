@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.VectorFunctions._
-import graft.operators.Checkpoint.CheckpointOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -368,7 +367,7 @@ object SimilarityQueries {
       // re-running) the ENTIRE annBatch serving plan, which alone halves
       // this query's 200 KB formatted plan (r16 opt)
       val emb = Tables.embeddings(s, d)
-      val ann = annBatch(emb, d, nProbe = 4).lazyCheckpoint()
+      val ann = annBatch(emb, d, nProbe = 4).localCheckpoint(eager = false)
       // GT pair-join parallelism floor (r17, measured at sf1): the
       // corpus side arrives as scan splits — 2 tasks on the single-file
       // fixture — while the exact ground truth multiplies every corpus
@@ -391,7 +390,7 @@ object SimilarityQueries {
         .withColumn("grank", row_number().over(wq))
         .filter(col("grank") <= k)
         .select(col("qid"), col("vec_id").as("nn_id"), col("grank"))
-        .buildCheckpoint() // re-read by the hit count and the MRR probe
+        .localCheckpoint() // re-read by the hit count and the MRR probe
       val hits = ann.join(gt, Seq("qid", "nn_id"))
         .groupBy("qid").agg(count(lit(1)).as("h"))
       val rr = gt.filter(col("grank") === 1)

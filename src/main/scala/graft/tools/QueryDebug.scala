@@ -1,7 +1,11 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Dev utility: inspect, time, audit or dump registered queries by name.
   *
@@ -128,62 +132,57 @@ object QueryDebug {
   private def isWide(n: String) =
     wideSub.exists(n.contains) || wideExact.contains(n)
 
-  /** Wide PAYLOAD columns carried by each shuffle exchange of `df`'s
+  /** Wide PAYLOAD columns carried by each shuffle exchange of a
     * physical plan, one entry per offending exchange. A wide column that
     * is part of the exchange's PARTITIONING KEY is not flagged — keying
     * by a token/shingle is how inverted indexes and token aggregates
-    * work; the scale-killer is wide data riding along as payload.
-    * AQE-robust: an AdaptiveSparkPlanExec root is a LEAF whose real tree
-    * sits in inputPlan, so the walk descends into it explicitly (a naive
-    * foreach would visit nothing and pass vacuously — caught in review;
-    * AuditSpec pins detection under both AQE settings). */
-  private[graft] def wideShuffles(
-      df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.catalyst.expressions.Attribute
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    val found = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-    def walk(p: SparkPlan): Unit = {
-      p match {
-        case a: AdaptiveSparkPlanExec => walk(a.inputPlan)
-        case e: ShuffleExchangeExec =>
-          val keyNames = e.outputPartitioning match {
-            case h: HashPartitioning => h.expressions.flatMap {
-              case a: Attribute => Some(a.name.toLowerCase)
-              case _ => None
-            }.toSet
-            case _ => Set.empty[String]
-          }
-          val carried = e.output.map(_.name.toLowerCase)
-            .filter(n => isWide(n) && !keyNames.contains(n))
-          if (carried.nonEmpty) found += carried
-        case _ =>
-      }
-      p.children.foreach(walk)
-      p.subqueries.foreach(walk)
-    }
-    walk(df.queryExecution.executedPlan)
-    found.toSeq
-  }
+    * work; the scale-killer is wide data riding along as payload. The
+    * exchanges are found by `Parallelism.exchanges`, which walks an AQE
+    * root's current plan (AuditSpec pins detection under both AQE
+    * settings, before and after execution). */
+  private[graft] def wideShuffles(plan: SparkPlan): Seq[Seq[String]] =
+    graft.operators.Parallelism.exchanges(plan).collect {
+      case e: ShuffleExchangeExec =>
+        val keyNames = e.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.collect {
+            case a: Attribute => a.name.toLowerCase
+          }.toSet
+          case _ => Set.empty[String]
+        }
+        e.output.map(_.name.toLowerCase)
+          .filter(n => isWide(n) && !keyNames.contains(n))
+    }.filter(_.nonEmpty)
 
-  /** Raw-width shuffle audit: for EVERY registered query, walk the
-    * physical plan and flag any shuffle exchange whose output carries a
-    * raw or derived wide column (text/embedding/token arrays/vectors) —
-    * the scale-killer class (wide columns crossing the wire for
+  private[graft] def wideShuffles(df: DataFrame): Seq[Seq[String]] =
+    wideShuffles(df.queryExecution.executedPlan)
+
+  /** The wide shuffles of one registered query as it EXECUTES: run it
+    * evaluating every output column (`CodegenWorkingSet.touchAll`; a
+    * `count()` would let column pruning strip the very payload columns
+    * the walk looks for) and walk the plan of every SQL execution it ran
+    * — each eager or lazy checkpoint, each memoized build and each child
+    * session's query is an execution of its own. The persistent RDDs it
+    * left are dropped after, as `time` and Bench do. */
+  private[graft] def auditQuery(
+      spark: SparkSession, name: String, sfDir: String): Seq[Seq[String]] =
+    try {
+      val (_, plans) = GraftBridge.executedPlans(spark)(
+        CodegenWorkingSet.touchAll(graft.SparkEntry.queries(name)(spark, sfDir)))
+      plans.flatMap(wideShuffles)
+    } finally spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+
+  /** Raw-width shuffle audit: EXECUTE every registered query
+    * ([[auditQuery]]) and flag any shuffle exchange whose output carries
+    * a raw or derived wide column (text/embedding/token arrays/vectors)
+    * — the scale-killer class (wide columns crossing the wire for
     * something an aggregate or narrow projection should have reduced
-    * first). Not clean (exit code 1) on any non-allowlisted hit, AND on
-    * any query that failed to plan (a broken audit must not read as a
-    * passing one). */
+    * first). AQE is off on the session, so the plans are the static
+    * shapes the allowlist describes. Not clean (exit code 1) on any
+    * non-allowlisted hit, AND on any query that failed to execute (a
+    * broken audit must not read as a passing one). */
   private def audit(spark: SparkSession, args: Array[String]): Boolean = {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // Walk build plans too: skipping localCheckpoint keeps index-build
-    // lineage in the plan, so exchanges below materialization points —
-    // the round-5 audit blind spot — are flagged like any other. The
-    // allowlist below is then the ONLY justification record; in-code
-    // comments no longer shield an exchange from the walk.
-    graft.operators.Checkpoint.inlineForAudit = true
     val sfDir = sfDirArg(args, 0)
     // Known-inherent wide shuffles — each entry must justify WHY the
     // operator cannot reduce the column before the exchange. Anything
@@ -228,9 +227,9 @@ object QueryDebug {
           "pass vs |corpus|x compute above it")))
     var hits = 0
     var errors = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    graft.SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
       try {
-        wideShuffles(fn(spark, sfDir)).foreach { carried =>
+        auditQuery(spark, name, sfDir).foreach { carried =>
           val justification = allowed.get(name)
             .collect { case (cs, why) if carried.forall(cs) => why }
           justification match {
@@ -297,7 +296,7 @@ object QueryDebug {
     "pipeline_e2e" -> "end-to-end curation verdict: stage outputs are checkpointed seams (quality -> NARROW fingerprint-window exact dedup -> CC over canonicals), final verdict is two doc_id-keyed left joins",
     "sim_ann_batch" -> "batched-query ANN: native graft_nearest_cells probe ranking inline in the explode (one codegen stage), probe set broadcast into the cell join (corpus vectors never shuffle), per-query top-k via partial_topkaggregator heaps, coverage left-join broadcasting the k-per-query top-k side (no sort-merge)",
     "sim_ann_ivf_indexed" -> "persisted IVF probe: cell IN (...) lands in PartitionFilters — only nProbe cell directories are listed, broadcast query vector, TakeOrderedAndProject",
-    "dedup_simhash_md5" -> "oracle-checked SimHash twin: md5-derived 60-bit token hashes; the signature build (partial_simhashaggregator below one doc exchange) sits under the checkpoint feeding both sides of the 16-bit piece-blocked self-join — run the audit's inline mode to see it",
+    "dedup_simhash_md5" -> "oracle-checked SimHash twin: md5-derived 60-bit token hashes; the signature build (partial_simhashaggregator below one doc exchange) sits under the checkpoint feeding both sides of the 16-bit piece-blocked self-join; the build's exchange is in the checkpoint's own execution, which `QueryDebug audit` walks",
     "curate_shuffle" -> "seeded global permutation: md5 hash key projection + quantile-bucketed global rank — no single-partition window, no wide columns in any exchange",
     "sim_quantize_int8" -> "fused native graft_quantize_int8: zero exchanges — maxabs computed inside the expression's own loop (no CollapseProject quadratic trap, no barrier)",
     "dedup_semantic" -> "SemDeDup: checkpointed (cell-filtered, unit-normalized) assignment feeds both self-join sides; cell self-join broadcasts at this SF (co-partitioned SMJ at scale), one graft_dot per pair inside the semi-join condition, dup flag via narrow id left-join",
@@ -409,7 +408,7 @@ object QueryDebug {
       val wall = (System.nanoTime() - t0) / 1e9
       // drain listener events deterministically: a fixed sleep under-
       // counted jobs/stages/shuffle on a loaded box (advisor round-16)
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark, 10000)
+      GraftBridge.drainListenerBus(spark, 10000)
       println(f"rep$r $n%-28s $wall%6.2f s  rows=$cnt  " +
         f"jobs=${nJobs.get}%-3d stages=${nStages.get}%-3d tasks=${nTasks.get}%-5d " +
         f"taskTime=${taskMs.get / 1000.0}%7.1f s  " +

@@ -126,15 +126,21 @@ object GraftBridge {
       s"localCheckpointCounting: need long columns '$aName', '$bName' in " +
         output.map(a => s"${a.name}:${a.dataType.simpleString}").mkString(", "))
     val acc = spark.sparkContext.longAccumulator("graft.checkpoint.changed")
-    val rdd = qe.toRdd.mapPartitions { it =>
-      it.map { r =>
-        if (r.isNullAt(ia) || r.isNullAt(ib) || r.getLong(ia) != r.getLong(ib))
-          acc.add(1L)
-        r.copy()
+    // one SQL execution, like Dataset.localCheckpoint's own, so listeners
+    // on SQL executions (QueryDebug's audit) see the plan it runs
+    val rdd = execution.SQLExecution.withNewExecutionId(
+        qe, Some("localCheckpoint")) {
+      val rdd = qe.toRdd.mapPartitions { it =>
+        it.map { r =>
+          if (r.isNullAt(ia) || r.isNullAt(ib) || r.getLong(ia) != r.getLong(ib))
+            acc.add(1L)
+          r.copy()
+        }
       }
+      rdd.localCheckpoint()
+      rdd.count() // ONE job: materializes the checkpoint AND fills acc
+      rdd
     }
-    rdd.localCheckpoint()
-    rdd.count() // ONE job: materializes the checkpoint AND fills acc
     val out = ofRows(spark, LogicalRDD(
       output, rdd, UnknownPartitioning(0), Nil, isStreaming = false, None)(
       spark, None, None: Option[ExpressionSet]))
@@ -146,6 +152,38 @@ object GraftBridge {
     * fixed sleep under-counted on a loaded box; advisor round-16). */
   def drainListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** `body`'s result and the executed plan of every SQL execution that
+    * ended while it ran, in the order they ended. One listener on the
+    * whole context (a session's `QueryExecutionListener` would miss the
+    * executions of child sessions), reading the `QueryExecution` each
+    * `SparkListenerSQLExecutionEnd` carries: every action, every eager or
+    * lazy `localCheckpoint`, every write. The bus is drained before the
+    * listener is added and before the plans are returned, so no earlier
+    * execution leaks in and none of `body`'s is missed. */
+  def executedPlans[T](spark: SparkSession)(body: => T)
+      : (T, Seq[execution.SparkPlan]) = {
+    val plans =
+      new java.util.concurrent.ConcurrentLinkedQueue[execution.SparkPlan]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case end: execution.ui.SparkListenerSQLExecutionEnd
+            if end.qe != null =>
+          plans.add(end.qe.executedPlan); ()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    drainListenerBus(spark, 60000)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      drainListenerBus(spark, 60000)
+      import scala.jdk.CollectionConverters._
+      (out, plans.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Bytes (memory + disk) of `rddId`'s cached blocks as the block
     * manager master holds them. Executors report every block they store
@@ -166,7 +204,7 @@ object GraftBridge {
     * `UnknownPartitioning` (coalesced / not-yet-rewritable shuffle
     * reads), so every consumer of the materialized index pays a fresh
     * exchange for a partitioning the data already satisfies — measured
-    * round 16: each `repartition(k).buildCheckpoint()` site re-shuffled
+    * round 16: each `repartition(k).localCheckpoint()` site re-shuffled
     * per consumer. Caller contract: the checkpoint was built from a
     * `repartition(numParts, keys…)` (REPARTITION_BY_NUM — AQE may not
     * coalesce it), so `HashPartitioning(keys, numParts)` is the true
@@ -185,7 +223,7 @@ object GraftBridge {
     ck.queryExecution.analyzed match {
       case lr: LogicalRDD if lr.rdd.getNumPartitions == numParts =>
         // a key name must match exactly ONE output attribute: with
-        // duplicate names (possible for callers outside partitionedBy,
+        // duplicate names (possible for callers outside buildCheckpointBy,
         // which rejects ambiguous df.col), find() would stamp the first
         // match and consumers keyed on the OTHER attribute would skip a
         // required exchange — return unstamped instead, like missing keys

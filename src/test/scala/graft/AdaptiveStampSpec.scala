@@ -1,11 +1,14 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import graft.operators.Parallelism
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
 
-/** Pins `Checkpoint.adaptivelyStampedBy` (r17, VERDICT item 3): below
+/** Pins `buildCheckpointAdaptiveBy` (r17, VERDICT item 3): below
   * `spark.graft.stamp.minBytes` the result is byte-identical to the
   * plain localCheckpoint the round-16 A/Bs measured as the bench-scale
   * winner; at/above it the materialized rows are re-checkpointed keyed
@@ -95,12 +98,18 @@ class AdaptiveStampSpec extends SparkSpec {
     assert(small === big)
   }
 
-  test("audit mode inlines: lineage stays visible") {
-    graft.operators.Checkpoint.inlineForAudit = true
-    try {
-      val out = input.buildCheckpointAdaptiveBy("k")
-      assert(!out.queryExecution.analyzed.isInstanceOf[LogicalRDD])
-    } finally graft.operators.Checkpoint.inlineForAudit = false
+  test("once the stamp engages (minBytes = 1), the stamp's keyed exchange is among the executed plans") {
+    def keyedExchanges(minBytes: Long): Seq[Seq[String]] = {
+      val (_, plans) = GraftBridge.executedPlans(spark)(
+        withThreshold(minBytes)(input.buildCheckpointAdaptiveBy("k")))
+      plans.flatMap(Parallelism.exchanges).collect {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+      }.collect { case h: HashPartitioning =>
+        h.expressions.collect { case a: Attribute => a.name }
+      }
+    }
+    assert(keyedExchanges(1L) == Seq(Seq("k")))
+    assert(keyedExchanges(Long.MaxValue).isEmpty)
   }
 
   test("malformed threshold conf falls back to the default, not a crash") {

@@ -1,6 +1,7 @@
 package graft
 
-import graft.tools.QueryDebug
+import graft.tools.{CodegenWorkingSet, QueryDebug}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 /** Meta-test for the wide-shuffle audit: the tool that guards the
@@ -33,8 +34,7 @@ class AuditSpec extends SparkSpec {
 
   test("under AQE the same bad plan is STILL detected (inputPlan descent)") {
     // the AdaptiveSparkPlanExec root is a leaf to a naive traversal —
-    // wideShuffles must descend into inputPlan or it passes vacuously
-    // (the original review finding)
+    // wideShuffles must descend into it or it passes vacuously
     withAqe(on = true) {
       val bad = Tables.documents(spark, sf0001).repartition(col("doc_id"))
       val flagged = QueryDebug.wideShuffles(bad)
@@ -42,59 +42,58 @@ class AuditSpec extends SparkSpec {
     }
   }
 
-  test("build exchanges below a checkpoint are hidden normally, SEEN in audit mode") {
-    // the round-5 blind spot: an eager localCheckpoint plans as a bare
-    // RDD scan, so a wide exchange below it escapes the walk. The
-    // Checkpoint seam must (a) hide it in production mode — documenting
-    // why the audit needs inline mode at all — and (b) surface it when
-    // inlineForAudit is set, which is how `QueryDebug audit` now runs.
-    import graft.operators.Checkpoint
-    // the aggregate reads text ABOVE the build exchange, so column
-    // pruning cannot strip the wide payload out of the inline-mode plan
-    def buildThenConsume(): org.apache.spark.sql.DataFrame =
-      Checkpoint(
-        Tables.documents(spark, sf0001).repartition(col("doc_id")))
-        .groupBy("lang").agg(sum(length(col("text"))).as("chars"))
+  test("executedPlans sees a wide exchange below an eager and below a lazy localCheckpoint") {
+    // a localCheckpoint plans as a bare RDD scan, so a wide exchange
+    // below it is absent from the consumer's plan; it is in the
+    // checkpoint's own execution, which the audit collects
     withAqe(on = false) {
-      assert(!Checkpoint.inlineForAudit,
-        "suite must start in production mode")
-      assert(QueryDebug.wideShuffles(buildThenConsume()).isEmpty,
-        "checkpointed build exchange should be invisible in production mode")
+      for (eager <- Seq(true, false)) {
+        val (_, plans) = GraftBridge.executedPlans(spark) {
+          val ck = Tables.documents(spark, sf0001).repartition(col("doc_id"))
+            .localCheckpoint(eager)
+          val consumer = ck.groupBy("lang").agg(sum(length(col("text"))))
+          assert(QueryDebug.wideShuffles(consumer).isEmpty,
+            "the consumer's own plan has no wide exchange")
+          CodegenWorkingSet.touchAll(consumer)
+        }
+        val flagged = plans.flatMap(QueryDebug.wideShuffles)
+        assert(flagged.exists(_.contains("text")),
+          s"eager=$eager: the build exchange is not among the executed plans")
+      }
+    }
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  test("under AQE a join's exchanges are seen before and after execution") {
+    // the exchanges of a sort-merge join are added by EnsureRequirements:
+    // the AQE root's inputPlan has none, its current plan has both
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    withAqe(on = true) {
       try {
-        Checkpoint.inlineForAudit = true
-        val flagged = QueryDebug.wideShuffles(buildThenConsume())
-        assert(flagged.nonEmpty && flagged.head.contains("text"),
-          s"inline mode must surface the build exchange, got $flagged")
-      } finally Checkpoint.inlineForAudit = false
+        spark.conf.set(key, "-1")
+        val docs = Tables.documents(spark, sf0001)
+        val joined = docs.select("doc_id", "text")
+          .join(docs.select("doc_id", "lang"), "doc_id")
+        assert(QueryDebug.wideShuffles(joined) == Seq(Seq("text")))
+        CodegenWorkingSet.touchAll(joined)
+        assert(QueryDebug.wideShuffles(joined) == Seq(Seq("text")))
+      } finally spark.conf.set(key, prev)
     }
   }
 
-  test("audit-mode connectedComponents plan fails fast if executed") {
-    // inlineForAudit makes connectedComponents return ONE unconverged
-    // round — fine for plan-walking, semantically WRONG if executed (a
-    // result-running audit, or a flag leaked past an exception). The
-    // label column is poisoned: planning must succeed, any action must
-    // throw, and resetting the flag must restore real execution.
-    import graft.operators.Checkpoint
-    assert(!Checkpoint.inlineForAudit, "suite must start in production mode")
-    val run = graft.queries.DedupQueries.queries("dedup_clusters")
-    try {
-      Checkpoint.inlineForAudit = true
-      val df = run(spark, sf0001)
-      df.queryExecution.executedPlan // planning + audit walk: fine
-      // collect(), not count(): cluster labels feed only output VALUES
-      // (the downstream join keys on doc_id), so a bare count prunes the
-      // poisoned column away — and its result is actually correct (the
-      // id set is round-invariant). The hazard is reading label VALUES.
-      val e = intercept[Exception](df.collect())
-      def causes(t: Throwable): Seq[Throwable] =
-        Option(t).toSeq.flatMap(x => x +: causes(x.getCause))
-      assert(causes(e).exists(c => c.isInstanceOf[IllegalStateException] &&
-          c.getMessage.contains("audit-only plan executed")),
-        s"expected poison throw, got $e")
-    } finally Checkpoint.inlineForAudit = false
-    // flag reset: the same entry point executes for real again
-    assert(run(spark, sf0001).count() > 0)
+  test("the audit of ta_boilerplate finds its allowlisted w exchange below the adaptive checkpoint") {
+    withAqe(on = false) {
+      val flagged = QueryDebug.auditQuery(spark, "ta_boilerplate", sf0001)
+      assert(flagged.nonEmpty && flagged.forall(_ == Seq("w")), s"got $flagged")
+    }
+  }
+
+  test("the audit of q66_outer_explode comes out clean") {
+    withAqe(on = false) {
+      assert(QueryDebug.auditQuery(spark, "q66_outer_explode", sf0001).isEmpty)
+    }
   }
 
   test("a wide column used as the partitioning KEY is not flagged") {

@@ -199,6 +199,19 @@ class BenchFormatSpec extends AnyFunSuite with TempDirs {
     assert(c2 != 0 && o2.contains("no metric=total"), o2)
   }
 
+  test("benchcheck without a record path prints its usage and exits 2") {
+    // run bare it used to check the committed BENCH_LAST.json, which
+    // read like a verdict on the run Bench had just written
+    assume(python3Available, "python3 not on PATH")
+    val out = new StringBuilder
+    import scala.sys.process._
+    val code = Process(Seq("python3", "tools/benchcheck.py"),
+      new java.io.File(".")).!(ProcessLogger(l => { out.append(l); () }))
+    assert(code == 2, out)
+    assert(out.toString.contains("usage") &&
+      out.toString.contains("BENCH_LAST_ATTEMPT.json"), out)
+  }
+
   // ---- benchcheck verdict stamping (round-16 verdict #5) ----
 
   test("benchcheck stamps qualified into the artifact and round-trips it") {

@@ -372,26 +372,42 @@ class MiscSpec extends SparkSpec {
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(planted == Map("click" -> ((4L, 4L, 5000L))), s"got $planted")
 
-    // laziness: with the checkpoint seam inlined, CONSTRUCTING the query
-    // must run no job beyond the parquet schema-footer read every scan
-    // pays — pins the fix for the approxQuantile-at-construction defect
-    // (boundaries are now derived in-plan). A job-group-tagged sentinel
-    // bounds the wait: the listener bus is FIFO, so once the sentinel's
-    // start is visible, any construction-time job start has been seen.
-    val preSentinel = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // laziness: CONSTRUCTING the query must run no job beyond the
+    // parquet schema-footer read every scan pays and the materialization
+    // of its own eager checkpoints, allowed by the call site Spark names
+    // their SQL executions with (their stages run on AQE's threads, so
+    // stage names do not carry it) — pins the fix for the
+    // approxQuantile-at-construction defect (boundaries are now derived
+    // in-plan). A job-group-tagged sentinel bounds the wait: the
+    // listener bus is FIFO, so once the sentinel's start is visible, any
+    // construction-time job start has been seen.
+    val checkpointSite = "localCheckpoint at MiscQueries.scala:"
+    val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val preSentinel =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
     val sentinelSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
     val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case st: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          executions.put(st.executionId, st.description); ()
+        case _ =>
+      }
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         if (j.properties != null &&
             "ks-lazy-sentinel" == j.properties.getProperty("spark.jobGroup.id"))
           sentinelSeen.set(true)
-        else if (!sentinelSeen.get())
-          preSentinel.add(j.stageInfos.map(_.name).mkString(" | "))
+        else if (!sentinelSeen.get()) {
+          // an execution's start precedes its jobs' on the FIFO bus
+          val exec = Option(j.properties)
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .flatMap(id => Option(executions.get(id.toLong))).getOrElse("")
+          preSentinel.add(exec -> j.stageInfos.map(_.name))
+        }
         ()
       }
     }
-    graft.operators.Checkpoint.inlineForAudit = true
     spark.sparkContext.addSparkListener(listener)
     try {
       MiscQueries.queries("stats_ks_drift")(spark, sf0001) // construct only
@@ -402,13 +418,14 @@ class MiscSpec extends SparkSpec {
         Thread.sleep(10)
       assert(sentinelSeen.get(), "sentinel job never surfaced on the bus")
       import scala.jdk.CollectionConverters._
-      val unexpected = preSentinel.asScala.filterNot(_.contains("parquet at"))
+      val unexpected = preSentinel.asScala.filterNot { case (exec, stages) =>
+        exec.startsWith(checkpointSite) || stages.exists(_.contains("parquet at"))
+      }.map { case (exec, stages) => s"$exec: ${stages.mkString(" | ")}" }
       assert(unexpected.isEmpty,
         s"construction ran data job(s): ${unexpected.mkString("; ")}")
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
-      graft.operators.Checkpoint.inlineForAudit = false
     }
   }
 

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.functions.col
-import graft.operators.{Checkpoint, Parallelism}
+import graft.operators.Parallelism
 
 /** `Parallelism.floor` reads the partition count from `df.rdd`, which
   * under AQE runs the upstream stages of any exchange in the frame. Its
@@ -44,7 +44,7 @@ class ParallelismSpec extends SparkSpec {
     val n = GraftBridge.shufflePartitions(spark)
     val scan = Tables.embeddings(spark, sf0001).select(col("vec_id"))
     assert(Parallelism.floor(scan).rdd.getNumPartitions >= n)
-    val checkpointed = Checkpoint(grouped)
+    val checkpointed = grouped.localCheckpoint()
     assert(Parallelism.floor(checkpointed).count() ==
       grouped.count())
   }

@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
 """Bench-record qualifier: encode the "only trust similar-calib runs" policy.
 
-Usage: python3 tools/benchcheck.py [BENCH_LAST.json]
+Usage: python3 tools/benchcheck.py <record>
+
+(the run graft.Bench just wrote is BENCH_LAST_ATTEMPT.json, or the path in
+SPARK_GRAFT_BENCH_OUT; with no argument the tool prints this usage and
+exits 2)
 
 Reads the persisted bench record (detail line + total line as written by
 graft.Bench) and exits non-zero unless the run qualifies as a round
@@ -123,7 +127,12 @@ def displacement_check(path, queries, total, ref):
 
 
 def main() -> int:
-    path = sys.argv[1] if len(sys.argv) > 1 else "BENCH_LAST.json"
+    if len(sys.argv) < 2:
+        print("usage: python3 tools/benchcheck.py <record>  (the run "
+              "graft.Bench just wrote: BENCH_LAST_ATTEMPT.json)",
+              file=sys.stderr)
+        return 2
+    path = sys.argv[1]
     try:
         lines = [l for l in open(path).read().splitlines() if l.strip()]
     except OSError as e:
