@@ -61,14 +61,7 @@ object Main {
       throw new UnsupportedOperationException(
         s"implementation '${o.implementation}' not supported. " +
           s"Supported: ${implementations.keys.mkString(", ")}"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-wordcount")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(master = sys.env.get("SPARK_MASTER"))
     try {
       val written = impl(o, spark)
       val nanos = System.nanoTime() - start

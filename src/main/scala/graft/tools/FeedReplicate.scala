@@ -63,13 +63,7 @@ object FeedReplicate {
       "usage: FeedReplicate <srcStoreRoot> <dstStoreRoot> [maxEntriesPerTrigger]")
     val (src, dst) = (args(0), args(1))
     val perTrigger = if (args.length > 2) args(2).toLong else 1L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-feedreplicate").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     try {
       replicate(spark, src, dst, perTrigger)
 

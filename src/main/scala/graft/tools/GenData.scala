@@ -2,7 +2,7 @@ package graft.tools
 
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
 
 /** Deterministic synthetic-data generator for scale testing (SCALE.md).
   *
@@ -224,15 +224,7 @@ object GenData {
     val filesRequested = if (args.length > 2) args(2).toInt else 16
     val sz = Sizes(sf)
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-gendata")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     import spark.implicits._
 
     def write(df: DataFrame, name: String, sortCols: Seq[String],

@@ -1,7 +1,8 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import graft.metrics.Recording
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
@@ -20,9 +21,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   *   QueryDebug plans <out.md> [sfDir]                 — regenerate PLANS.md
   *   QueryDebug codegen <sfDir> <query>[,query...]     — codegen working set
   *
-  * Every mode runs on ONE session built by the rule Bench and Verify
-  * use: SPARK_GRAFT_CPUS threads and shuffle partitions (default: the
-  * machine's processor count), UTC, UI off. `audit` additionally turns
+  * Every mode runs on ONE session built by the rule every main uses
+  * ([[graft.LocalSession]], log level ERROR). `audit` additionally turns
   * AQE off on that session.
   */
 object QueryDebug {
@@ -39,22 +39,9 @@ object QueryDebug {
         case other => sys.error(s"unknown mode '$other' " +
           "(expected explain|explainf|time|audit|dump|plans|codegen)")
       }
-    val spark = session()
+    val spark = graft.LocalSession("ERROR")
     val clean = try run(spark, args.drop(1)) finally spark.stop()
     if (!clean) sys.exit(1)
-  }
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
   }
 
   private def sfDirArg(args: Array[String], i: Int): String =
@@ -161,16 +148,16 @@ object QueryDebug {
     * `count()` would let column pruning strip the very payload columns
     * the walk looks for) and walk the plan of every SQL execution it ran
     * — each eager or lazy checkpoint, each memoized build and each child
-    * session's query is an execution of its own. The persistent RDDs it
-    * left are dropped after, as `time` and Bench do. */
+    * session's query is an execution of its own, and a recording
+    * collects them all. The RDDs it left persisted are dropped after, as
+    * `time` does. */
   private[graft] def auditQuery(
-      spark: SparkSession, name: String, sfDir: String): Seq[Seq[String]] =
-    try {
-      val (_, plans) = GraftBridge.executedPlans(spark)(
-        CodegenWorkingSet.touchAll(graft.SparkEntry.queries(name)(spark, sfDir)))
-      plans.flatMap(wideShuffles)
-    } finally spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+      spark: SparkSession, name: String, sfDir: String): Seq[Seq[String]] = {
+    val (_, rec) = Recording.of(spark)(
+      CodegenWorkingSet.touchAll(graft.SparkEntry.queries(name)(spark, sfDir)))
+    rec.persisted.foreach(_.unpersist(blocking = false))
+    rec.plans.flatMap(wideShuffles)
+  }
 
   /** Raw-width shuffle audit: EXECUTE every registered query
     * ([[auditQuery]]) and flag any shuffle exchange whose output carries
@@ -344,91 +331,39 @@ object QueryDebug {
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 2
     try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    // Contention-proof work counters per rep: the box's roaming
-    // bandwidth co-tenant makes wall-clock A/Bs swing ±50%, while job/
-    // stage/task counts and shuffle bytes are deterministic properties
-    // of the executed plan — the primary optimization evidence.
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
-    val nJobs = new java.util.concurrent.atomic.AtomicLong
-    val nStages = new java.util.concurrent.atomic.AtomicLong
-    val nTasks = new java.util.concurrent.atomic.AtomicLong
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val inputB = new java.util.concurrent.atomic.AtomicLong
-    val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          nJobs.incrementAndGet()
-          jobs.put(j.jobId, (System.nanoTime(),
-            Option(j.properties.getProperty("spark.job.description"))
-              .getOrElse(j.stageInfos.headOption.map(_.name).getOrElse(""))))
-        }
-        override def onJobEnd(
-            j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val st = jobs.remove(j.jobId)
-          if (st != null) done.add((j.jobId,
-            (System.nanoTime() - st._1) / 1e9, st._2))
-        }
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          nStages.incrementAndGet()
-          val m = s.stageInfo.taskMetrics
-          if (m != null) {
-            taskMs.addAndGet(m.executorRunTime)
-            shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            inputB.addAndGet(m.inputMetrics.bytesRead)
-            if (m.executorRunTime >= 300)
-              stageLog.add(f"stage${s.stageInfo.stageId}%-5d " +
-                f"taskTime=${m.executorRunTime / 1000.0}%7.1f s " +
-                f"tasks=${s.stageInfo.numTasks}%-4d " +
-                f"shufR=${m.shuffleReadMetrics.totalBytesRead / 1048576.0}%7.1f MB " +
-                f"in=${m.inputMetrics.bytesRead / 1048576.0}%7.1f MB  " +
-                s.stageInfo.name.take(90))
-          }
-        }
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          nTasks.incrementAndGet()
-      })
+    // work counters per rep, one recording each: wall clock swings ±50%
+    // with a bandwidth co-tenant, counts and bytes are the plan's own
     val verbose = sys.env.get("GRAFT_TIME_JOBS").contains("1")
     for (r <- 1 to reps; n <- names) {
-      done.clear(); stageLog.clear()
-      Seq(nJobs, nStages, nTasks, taskMs, shufWrite, shufRead, inputB)
-        .foreach(_.set(0L))
-      val t0 = System.nanoTime()
-      // classes Spark compiled from generated code (JVM-wide): a warm rep
-      // that still compiles is missing Spark's codegen cache
-      val (cnt, compiled) = CodegenWorkingSet.counting(
-        graft.SparkEntry.queries(n)(spark, sfDir).count())
-      val wall = (System.nanoTime() - t0) / 1e9
-      // drain listener events deterministically: a fixed sleep under-
-      // counted jobs/stages/shuffle on a loaded box (advisor round-16)
-      GraftBridge.drainListenerBus(spark, 10000)
-      println(f"rep$r $n%-28s $wall%6.2f s  rows=$cnt  " +
-        f"jobs=${nJobs.get}%-3d stages=${nStages.get}%-3d tasks=${nTasks.get}%-5d " +
-        f"taskTime=${taskMs.get / 1000.0}%7.1f s  " +
-        f"shufW=${shufWrite.get / 1048576.0}%8.2f MB shufR=${shufRead.get / 1048576.0}%8.2f MB " +
-        f"input=${inputB.get / 1048576.0}%8.2f MB compiled=$compiled")
-      if (verbose) {
-        done.forEach { case (id, secs, desc) =>
-          if (secs >= 0.05)
-            println(f"    job$id%-5d ${secs}%6.2f s  ${desc.take(110)}")
-        }
-        stageLog.forEach(l => println("    " + l))
+      val ((cnt, compiled, wall), rec) = Recording.of(spark) {
+        val t0 = System.nanoTime()
+        // classes Spark compiled from generated code (JVM-wide): a warm
+        // rep that still compiles is missing Spark's codegen cache
+        val (cnt, compiled) = CodegenWorkingSet.counting(
+          graft.SparkEntry.queries(n)(spark, sfDir).count())
+        (cnt, compiled, (System.nanoTime() - t0) / 1e9)
       }
-      // INVARIANT (advisor round-16): unpersisting locally-checkpointed
-      // RDDs makes them unrecomputable — safe ONLY because every query
-      // rebuilds its state per rep and the cross-call memo caches hold
-      // collected driver values / on-disk paths, never live checkpointed
-      // DataFrames. A future DataFrame-level cross-rep cache would crash
-      // on rep 2 with missing checkpoint blocks if this line stays.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      val w = rec.work
+      println(f"rep$r $n%-28s $wall%6.2f s  rows=$cnt  " +
+        f"jobs=${w.jobs}%-3d stages=${w.stages}%-3d tasks=${w.tasks}%-5d " +
+        f"taskTime=${w.runMs / 1000.0}%7.1f s  " +
+        f"shufW=${w.shuffleWrite / 1048576.0}%8.2f MB shufR=${w.shuffleRead / 1048576.0}%8.2f MB " +
+        f"input=${w.input / 1048576.0}%8.2f MB compiled=$compiled")
+      if (verbose) {
+        for (j <- rec.jobs; ms <- j.durationMs if ms >= 50) {
+          val desc = if (j.execution.nonEmpty) j.execution
+            else j.stages.headOption.fold("")(_.name)
+          println(f"    job${j.id}%-5d ${ms / 1000.0}%6.2f s  ${desc.take(110)}")
+        }
+        for (s <- rec.stages if s.runMs >= 300)
+          println(f"    stage${s.id}%-5d taskTime=${s.runMs / 1000.0}%7.1f s " +
+            f"tasks=${s.tasks}%-4d shufR=${s.shuffleRead / 1048576.0}%7.1f MB " +
+            f"in=${s.input / 1048576.0}%7.1f MB  ${s.name.take(90)}")
+      }
+      // an unpersisted local checkpoint cannot be recomputed: safe only
+      // because every query rebuilds its state per rep and the memo
+      // caches hold driver values and on-disk paths, never DataFrames
+      rec.persisted.foreach(_.unpersist(blocking = false))
     }
   }
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Export the `documents` table's text column as one plain-text file —
   * the bridge from the generated corpus (GenData) to the CLI's
   * reference-parity surface (`graft.core.Main` consumes a text file,
@@ -19,13 +17,7 @@ object TextExport {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: TextExport <tableDir> <outFile>")
     val (tableDir, outFile) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-textexport").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     try {
       val tmp = java.nio.file.Files
         .createTempDirectory("graft-textexport").toFile

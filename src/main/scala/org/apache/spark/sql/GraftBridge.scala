@@ -147,42 +147,19 @@ object GraftBridge {
     (out, acc.value)
   }
 
-  /** Block until the listener bus has delivered all queued events —
-    * deterministic counter drain for QueryDebug's work counters (a
-    * fixed sleep under-counted on a loaded box; advisor round-16). */
+  /** Block until the listener bus has delivered all queued events
+    * (`graft.metrics.Recording` drains before and after its body). */
   def drainListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 
-  /** `body`'s result and the executed plan of every SQL execution that
-    * ended while it ran, in the order they ended. One listener on the
-    * whole context (a session's `QueryExecutionListener` would miss the
-    * executions of child sessions), reading the `QueryExecution` each
-    * `SparkListenerSQLExecutionEnd` carries: every action, every eager or
-    * lazy `localCheckpoint`, every write. The bus is drained before the
-    * listener is added and before the plans are returned, so no earlier
-    * execution leaks in and none of `body`'s is missed. */
-  def executedPlans[T](spark: SparkSession)(body: => T)
-      : (T, Seq[execution.SparkPlan]) = {
-    val plans =
-      new java.util.concurrent.ConcurrentLinkedQueue[execution.SparkPlan]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(
-          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case end: execution.ui.SparkListenerSQLExecutionEnd
-            if end.qe != null =>
-          plans.add(end.qe.executedPlan); ()
-        case _ =>
-      }
-    }
-    val sc = spark.sparkContext
-    drainListenerBus(spark, 60000)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      drainListenerBus(spark, 60000)
-      import scala.jdk.CollectionConverters._
-      (out, plans.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
+  /** The executed plan a `SparkListenerSQLExecutionEnd` carries in its
+    * private `qe` (every action, eager or lazy `localCheckpoint`, write);
+    * `None` for other events and for an end replayed from an event log. */
+  def executedPlan(e: org.apache.spark.scheduler.SparkListenerEvent)
+      : Option[execution.SparkPlan] = e match {
+    case end: execution.ui.SparkListenerSQLExecutionEnd if end.qe != null =>
+      Some(end.qe.executedPlan)
+    case _ => None
   }
 
   /** Bytes (memory + disk) of `rddId`'s cached blocks as the block

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Parallelism
-import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -100,9 +100,9 @@ class AdaptiveStampSpec extends SparkSpec {
 
   test("once the stamp engages (minBytes = 1), the stamp's keyed exchange is among the executed plans") {
     def keyedExchanges(minBytes: Long): Seq[Seq[String]] = {
-      val (_, plans) = GraftBridge.executedPlans(spark)(
+      val (_, rec) = graft.metrics.Recording.of(spark)(
         withThreshold(minBytes)(input.buildCheckpointAdaptiveBy("k")))
-      plans.flatMap(Parallelism.exchanges).collect {
+      rec.plans.flatMap(Parallelism.exchanges).collect {
         case e: ShuffleExchangeExec => e.outputPartitioning
       }.collect { case h: HashPartitioning =>
         h.expressions.collect { case a: Attribute => a.name }

@@ -1,7 +1,7 @@
 package graft
 
+import graft.metrics.Recording
 import graft.tools.{CodegenWorkingSet, QueryDebug}
-import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 /** Meta-test for the wide-shuffle audit: the tool that guards the
@@ -42,13 +42,13 @@ class AuditSpec extends SparkSpec {
     }
   }
 
-  test("executedPlans sees a wide exchange below an eager and below a lazy localCheckpoint") {
+  test("recorded plans show a wide exchange below an eager and a lazy localCheckpoint") {
     // a localCheckpoint plans as a bare RDD scan, so a wide exchange
     // below it is absent from the consumer's plan; it is in the
     // checkpoint's own execution, which the audit collects
     withAqe(on = false) {
       for (eager <- Seq(true, false)) {
-        val (_, plans) = GraftBridge.executedPlans(spark) {
+        val (_, rec) = Recording.of(spark) {
           val ck = Tables.documents(spark, sf0001).repartition(col("doc_id"))
             .localCheckpoint(eager)
           val consumer = ck.groupBy("lang").agg(sum(length(col("text"))))
@@ -56,13 +56,12 @@ class AuditSpec extends SparkSpec {
             "the consumer's own plan has no wide exchange")
           CodegenWorkingSet.touchAll(consumer)
         }
-        val flagged = plans.flatMap(QueryDebug.wideShuffles)
+        rec.persisted.foreach(_.unpersist(blocking = false))
+        val flagged = rec.plans.flatMap(QueryDebug.wideShuffles)
         assert(flagged.exists(_.contains("text")),
           s"eager=$eager: the build exchange is not among the executed plans")
       }
     }
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
   }
 
   test("under AQE a join's exchanges are seen before and after execution") {

@@ -62,13 +62,13 @@ class CheckpointCountingSpec extends SparkSpec {
       org.apache.spark.sql.execution.LogicalRDD])
   }
 
-  test("its one job runs as a SQL execution, so executedPlans sees its plan") {
+  test("its one job runs as a SQL execution, so a recording sees its plan") {
     val in = labelsDf(Seq((1L, 1L, 1L), (2L, 2L, 1L))).repartition(3)
-    val ((_, changed), plans) = GraftBridge.executedPlans(spark)(
+    val ((_, changed), rec) = graft.metrics.Recording.of(spark)(
       GraftBridge.localCheckpointCounting(in, "label", "old_label"))
     assert(changed === 1L)
-    assert(plans.size === 1)
-    assert(graft.operators.Parallelism.exchanges(plans.head).nonEmpty)
+    assert(rec.plans.size === 1)
+    assert(graft.operators.Parallelism.exchanges(rec.plans.head).nonEmpty)
   }
 
   test("loudly rejects missing or non-long columns") {

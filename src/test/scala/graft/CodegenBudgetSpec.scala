@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{MinHashBands, NearestCells, OrderedPairs, WordShingles}
+import graft.metrics.Recording
 import graft.tools.CodegenWorkingSet
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
@@ -24,15 +25,13 @@ class CodegenBudgetSpec extends SparkSpec {
     CodegenWorkingSet.touchAll(SparkEntry.queries(q)(spark, sf01)))
 
   test("a warm pass of the analytics mix compiles at most 70 classes into an empty cache") {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    try {
+    val (e, rec) = Recording.of(spark) {
       pass(); pass() // cold, then warm: memoized models and indexes built
-      val (_, e) = CodegenWorkingSet.measure(pass())
-      assert(e.compiled <= 70, e)
-      assert(e.wholeStage > 0 && e.expression > 0, e)
-    } finally sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!before.contains(id)) rdd.unpersist(blocking = false) }
+      CodegenWorkingSet.measure(pass())._2
+    }
+    rec.persisted.foreach(_.unpersist(blocking = false))
+    assert(e.compiled <= 70, e)
+    assert(e.wholeStage > 0 && e.expression > 0, e)
   }
 
   /** Compile `e` (reading its one input from ordinal 0), evaluate it

@@ -17,16 +17,18 @@ class EntryPointsSpec extends AnyFunSuite {
     "graft.tools.GenData", "graft.tools.TextExport",
     "graft.tools.FeedReplicate", "graft.tools.QueryDebug")
 
+  private def mainSources(): Seq[Path] = {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    finally walk.close()
+  }
+
   /** Fully-qualified name of every object in `src/main/scala` that
     * declares a `def main(`: the nearest `object` above each one. */
   private def mains(): Set[String] = {
-    val walk = Files.walk(Paths.get("src/main/scala"))
-    val files: Seq[Path] =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      finally walk.close()
     val pkg = """(?m)^package\s+([\w.]+)""".r
     val obj = """\bobject\s+(\w+)""".r
-    files.flatMap { f =>
+    mainSources().flatMap { f =>
       val src = Files.readString(f)
       val prefix = pkg.findFirstMatchIn(src).map(_.group(1) + ".").getOrElse("")
       """\bdef\s+main\s*\(""".r.findAllMatchIn(src).map { m =>
@@ -54,6 +56,15 @@ class EntryPointsSpec extends AnyFunSuite {
     val undocumented = expected.filterNot(section.contains)
     assert(undocumented.isEmpty,
       s"not listed in README section 7: ${undocumented.toSeq.sorted}")
+  }
+
+  test("src/main declares one SparkListener, the recorder in graft/metrics") {
+    // an inline listener elsewhere would be a second copy of the recorder
+    val listener = """\b(?:extends|new|with)\s+(?:org\.apache\.spark\.scheduler\.)?SparkListener\b""".r
+    val found = mainSources().flatMap(f =>
+      listener.findAllMatchIn(Files.readString(f)).map(_ => f.toString))
+    assert(found == Seq("src/main/scala/graft/metrics/Recording.scala"),
+      s"SparkListener declarations: ${found.mkString(", ")}")
   }
 
   private val expectedTools = Set("benchcheck.py", "bench_reference.json",

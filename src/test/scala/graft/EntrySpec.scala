@@ -1,8 +1,6 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftBridge
+import graft.metrics.Recording
 
 /** Registry consistency: the driver contract in [[SparkEntry]] must stay
   * closed — every registered query either has a DuckDB oracle or a
@@ -41,22 +39,12 @@ class EntrySpec extends SparkSpec {
     // site is "parquet at Tables.scala" and whose stack names the table
     // helper (Tables.documents, Tables.events, …) above Tables.load
     val helper = """graft\.Tables\$\.(\w+)\(""".r
-    val loads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        j.stageInfos.filter(_.name.startsWith("parquet at Tables.scala"))
-          .foreach(st => loads.add(helper.findAllMatchIn(st.details)
-            .map(_.group(1)).find(_ != "load").getOrElse(st.details)))
-    }
-    def loadsDuring(build: => Any): Seq[String] = {
-      GraftBridge.drainListenerBus(spark, 10000)
-      loads.clear()
-      build
-      GraftBridge.drainListenerBus(spark, 10000)
-      loads.asScala.toSeq
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val repeated = try SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    def loadsDuring(build: => Any): Seq[String] =
+      Recording.of(spark)(build)._2.jobs.flatMap(_.stages)
+        .filter(_.name.startsWith("parquet at Tables.scala"))
+        .map(st => helper.findAllMatchIn(st.details)
+          .map(_.group(1)).find(_ != "load").getOrElse(st.details))
+    val repeated = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         fn(spark, sf001) // warms the memos (IVF model, component labels, …)
         val tables = loadsDuring(fn(spark, sf001))
@@ -65,7 +53,7 @@ class EntrySpec extends SparkSpec {
         if (tables.distinct.size < tables.size)
           Some(s"$name: ${tables.sorted.mkString(", ")}")
         else None
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     assert(repeated.isEmpty,
       s"queries loading a table more than once:\n${repeated.mkString("\n")}")
   }

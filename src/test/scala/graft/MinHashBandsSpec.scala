@@ -59,30 +59,14 @@ class MinHashBandsSpec extends SparkSpec {
   }
 
   test("dedup_minhash_lsh work: 7 jobs per execution, only the candidate pairs persisted") {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    val before = sc.getPersistentRDDs.keySet
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark, 10000)
-    sc.addSparkListener(listener)
-    val rows = try {
-      val r = DedupQueries.queries("dedup_minhash_lsh")(spark, sf001)
-        .as[(Long, Long, Double)].collect()
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark, 10000)
-      r
-    } finally sc.removeSparkListener(listener)
+    val (rows, rec) = graft.metrics.Recording.of(spark)(
+      DedupQueries.queries("dedup_minhash_lsh")(spark, sf001)
+        .as[(Long, Long, Double)].collect())
     assert(rows.nonEmpty)
-    assert(jobs.get == 7, s"jobs=${jobs.get}")
-    val persisted = sc.getPersistentRDDs.filter { case (id, _) =>
-      !before.contains(id) }.values.toSeq
-    assert(persisted.size == 1, persisted.map(_.toString))
+    assert(rec.work.jobs == 7, s"jobs=${rec.work.jobs}")
+    assert(rec.persisted.size == 1, rec.persisted.map(_.toString))
     // the candidate pairs: a superset of the verified pairs
-    assert(persisted.head.count() >= rows.length)
-    persisted.foreach(_.unpersist(blocking = false))
+    assert(rec.persisted.head.count() >= rows.length)
+    rec.persisted.foreach(_.unpersist(blocking = false))
   }
 }

@@ -378,55 +378,17 @@ class MiscSpec extends SparkSpec {
     // their SQL executions with (their stages run on AQE's threads, so
     // stage names do not carry it) — pins the fix for the
     // approxQuantile-at-construction defect (boundaries are now derived
-    // in-plan). A job-group-tagged sentinel bounds the wait: the
-    // listener bus is FIFO, so once the sentinel's start is visible, any
-    // construction-time job start has been seen.
+    // in-plan). The recording's closing drain delivers every job start
+    // posted during construction.
     val checkpointSite = "localCheckpoint at MiscQueries.scala:"
-    val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    val preSentinel =
-      new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
-    val sentinelSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(
-          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case st: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          executions.put(st.executionId, st.description); ()
-        case _ =>
-      }
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (j.properties != null &&
-            "ks-lazy-sentinel" == j.properties.getProperty("spark.jobGroup.id"))
-          sentinelSeen.set(true)
-        else if (!sentinelSeen.get()) {
-          // an execution's start precedes its jobs' on the FIFO bus
-          val exec = Option(j.properties)
-            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-            .flatMap(id => Option(executions.get(id.toLong))).getOrElse("")
-          preSentinel.add(exec -> j.stageInfos.map(_.name))
-        }
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      MiscQueries.queries("stats_ks_drift")(spark, sf0001) // construct only
-      spark.sparkContext.setJobGroup("ks-lazy-sentinel", "bus flush")
-      spark.range(1).count() // sentinel
-      val deadline = System.currentTimeMillis() + 30000
-      while (!sentinelSeen.get() && System.currentTimeMillis() < deadline)
-        Thread.sleep(10)
-      assert(sentinelSeen.get(), "sentinel job never surfaced on the bus")
-      import scala.jdk.CollectionConverters._
-      val unexpected = preSentinel.asScala.filterNot { case (exec, stages) =>
-        exec.startsWith(checkpointSite) || stages.exists(_.contains("parquet at"))
-      }.map { case (exec, stages) => s"$exec: ${stages.mkString(" | ")}" }
-      assert(unexpected.isEmpty,
-        s"construction ran data job(s): ${unexpected.mkString("; ")}")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    val (_, rec) = graft.metrics.Recording.of(spark)(
+      MiscQueries.queries("stats_ks_drift")(spark, sf0001)) // construct only
+    val unexpected = rec.jobs.filterNot { j =>
+      j.execution.startsWith(checkpointSite) ||
+        j.stages.exists(_.name.contains("parquet at"))
+    }.map(j => s"${j.execution}: ${j.stages.map(_.name).mkString(" | ")}")
+    assert(unexpected.isEmpty,
+      s"construction ran data job(s): ${unexpected.mkString("; ")}")
   }
 
   test("graph_triangles: planted triangle found once; matches a brute-force Scala count") {

@@ -1,9 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.functions.col
+import graft.metrics.Recording
 import graft.operators.Parallelism
 
 /** `Parallelism.floor` reads the partition count from `df.rdd`, which
@@ -12,32 +11,16 @@ import graft.operators.Parallelism
   * job starts. */
 class ParallelismSpec extends SparkSpec {
 
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    GraftBridge.drainListenerBus(spark, 10000)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      GraftBridge.drainListenerBus(spark, 10000)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   private def grouped: DataFrame =
     Tables.embeddings(spark, sf0001).groupBy("label").count()
 
   test("a frame with an exchange is refused before any job starts") {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     val frame = grouped
-    val (err, jobs) = jobsDuring(
+    val (err, rec) = Recording.of(spark)(
       intercept[IllegalArgumentException](Parallelism.floor(frame)))
     assert(err.getMessage.contains("scan or a checkpoint"), err.getMessage)
-    assert(jobs == 0, s"$jobs job(s) started")
+    assert(rec.jobs.isEmpty, s"${rec.jobs.size} job(s) started")
   }
 
   test("a scan frame and a checkpoint frame pass") {

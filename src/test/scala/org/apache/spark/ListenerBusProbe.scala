@@ -9,4 +9,6 @@ import org.apache.spark.scheduler.SparkListener
 object ListenerBusProbe {
   def addToStatusQueue(sc: SparkContext, l: SparkListener): Unit =
     sc.listenerBus.addToStatusQueue(l)
+
+  def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size
 }
