@@ -50,8 +50,7 @@ object Main {
           o.collection, o.maxBatchSize)
         try q.processAllAvailable() finally q.stop()
       } finally staged.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
-      val f = new FileDocumentStoreFactory(o.outputDir)
-      f.readAll(o.collection).size.toLong
+      new FileDocumentStoreFactory(o.outputDir).docCount(o.collection).toLong
     })
 
   def main(args: Array[String]): Unit = {

@@ -115,12 +115,9 @@ object CurationQueries {
       val sh = Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           explode(shingles(col("text"), 3)).as("s"))
-        // size-ADAPTIVE stamp (r17): below the threshold identical to
-        // the plain repartition+checkpoint (r16 measured the always-on
-        // doc_id stamp at +0.3 s here); above it both sides' signature
-        // aggregates and the verify join read a doc_id-co-partitioned
-        // index exchange-free
-        .repartition(col("doc_id")).buildCheckpointAdaptiveBy("doc_id")
+        // keyed: both sides' signature aggregates and the verify join
+        // read the index on doc_id
+        .buildCheckpointBy("doc_id")
       val benchSh = sh.filter(col("source") === "src0")
         .select(col("doc_id").as("bench_id"), col("s"))
       val corpusSh = sh.filter(col("source") =!= "src0")
@@ -266,8 +263,8 @@ object CurationQueries {
     // the reassembly groupBy both shuffle on doc_id — linear, skew-free
     // (keys are documents). No self-joins anywhere.
     "ta_boilerplate" -> ((s, d) => {
-      // ONE doc_id exchange before the checkpoint is a co-partitioning
-      // INVESTMENT, not a parallelism hack: LogicalRDD keeps the
+      // the keyed checkpoint's ONE doc_id exchange is a co-partitioning
+      // INVESTMENT, not a parallelism hack: the stamp keeps the
       // partitioning, so the covered-position anti-join on (doc_id, pos)
       // and the reassembly groupBy(doc_id) both plan shuffle-free on the
       // token side. Without it each would re-shuffle every EXPLODED
@@ -279,14 +276,7 @@ object CurationQueries {
       val docs = Tables.documents(s, d)
         .withColumn("w", tokens(col("text")))
         .select("doc_id", "w")
-        .repartition(col("doc_id"))
-        // size-ADAPTIVE stamp (r17): r16 found localCheckpoint reports
-        // UnknownPartitioning, so the co-partitioning this comment
-        // promises was LOST at the seam (every consumer re-shuffled);
-        // the always-on stamp regressed at bench scale, the adaptive
-        // one restores the investment exactly when the exploded token
-        // side is big enough for it to pay
-        .buildCheckpointAdaptiveBy("doc_id") // toks, grams, final join
+        .buildCheckpointBy("doc_id") // toks, grams, final join
       // corpus-relative threshold: one count() action on the checkpointed
       // rows (same bounded-model-state pattern as the Bloom/IVF builds)
       val k = math.max(5L, math.ceil(0.004 * docs.count()).toLong)
@@ -372,11 +362,8 @@ object CurationQueries {
       val canonSh = staged.filter(col("passed_quality"))
         .select(col("doc_id"), explode(shingles(col("text"), 3)).as("s"))
         .join(canonIds, Seq("doc_id"), "left_semi")
-        // index-build exchange (see DedupQueries.exactJaccardPairs);
-        // size-ADAPTIVE stamp (r17): plain below the threshold (the r16
-        // A/B reverted the always-on doc_id stamp), co-partitioned above
-        .repartition(col("doc_id"))
-        .buildCheckpointAdaptiveBy("doc_id") // sizes + both self-join sides
+        // index-build exchange (see DedupQueries.exactJaccardPairs)
+        .buildCheckpointBy("doc_id") // sizes + both self-join sides
       val pairs = DedupQueries.exactJaccardOn(canonSh)
         .filter(col("jaccard") >= 0.8)
         .select("doc_a", "doc_b")

@@ -37,12 +37,13 @@ object DedupQueries {
 
   /** (doc_id, shingle) inverted index — distinct 3-gram shingles. NO
     * exchange of its own (the raw text is never shuffled; scan
-    * parallelism is reader splits). Callers that localCheckpoint the
-    * index add their own `repartition(doc_id)` first: the checkpoint
-    * fixes the partition count every consumer runs at (scan splits = one
-    * task on a single-file corpus — the 1.27M-pair probe regressed 74%
-    * when a round-5 sweep dropped this, review-caught), and the doc_id
-    * partitioning feeds prefixJaccard's full-index window for free.
+    * parallelism is reader splits). Callers that checkpoint the index
+    * key it on doc_id first (`buildCheckpointBy("doc_id")`): the
+    * checkpoint fixes the partition count every consumer runs at (scan
+    * splits = one task on a single-file corpus — the 1.27M-pair probe
+    * regressed 74% when a round-5 sweep dropped this, review-caught),
+    * and the doc_id partitioning feeds prefixJaccard's full-index window
+    * for free.
     * That exchange is the one-time BUILD cost of the reusable index —
     * at 100 TB the index is a persisted table and this is its write. */
   private[graft] def shingleIndex(s: SparkSession, d: String): DataFrame =
@@ -188,13 +189,10 @@ object DedupQueries {
       // which would shorten the prefix by one and break the exactness proof
       .filter(col("rk") <= col("n") - ceil(col("n") * t - lit(1e-9)) + 1)
       .select("doc_id", "s")
-      // size-ADAPTIVE stamp (r17): below the threshold identical to the
-      // plain checkpoint (the r16 A/B measured the always-on s-keyed
-      // stamp at +0.9 s here — 32-task stage overhead on a tiny prefix
-      // table); above it the prefix table co-partitions by s and the
-      // candidate self-join plans exchange-free — the at-scale shape
-      // the r16 revert had hard-coded away
-      .buildCheckpointAdaptiveBy("s") // both sides of the candidate self-join
+      // plain: the candidate self-join reads both sides through one
+      // reused exchange, so an s-keyed stamp only adds a stage (sf0.1:
+      // 19 → 20 stages, shuffle 14.7 → 17.0 MB)
+      .localCheckpoint() // both sides of the candidate self-join
     val cand = prefixed.toDF("doc_a", "s")
       .join(prefixed.toDF("doc_b", "s"), "s")
       .filter(col("doc_a") < col("doc_b"))
@@ -302,27 +300,24 @@ object DedupQueries {
   }
 
   private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
-    // size-ADAPTIVE stamps (r17, VERDICT item 3): below the threshold
-    // these are byte-identical to the plain checkpoints the r16 A/B
-    // measured as the bench-scale winners (dst/id-stamped variants
-    // regressed pipeline_e2e +0.6 s — pinned-count stages cost more
-    // than the tiny per-round exchanges they replaced); above it the
-    // edge table co-partitions by dst for every round's neighbor join
-    // and the label table by id — the 100 TB shape. The per-ROUND
-    // label checkpoint stays unstamped: it flows through
-    // localCheckpointCounting (the fused convergence count), and each
-    // round's table is the same size as the init labels, whose
-    // adaptive decision already reflects that size.
+    // Keyed: the edge table by dst for every round's neighbor join, the
+    // init label table by id for the first round's joins. The per-ROUND
+    // label checkpoint stays plain: it flows through
+    // localCheckpointCounting (the fused convergence count).
     // A null endpoint is not a node: such a pair is no edge. Kept, its
     // null label would count as changed in every round and the fixpoint
     // would never end.
-    val nonNull = pairs.toDF("src", "dst").na.drop()
-    val edges = nonNull
-      .unionAll(nonNull.toDF("dst", "src").select("src", "dst"))
-      .buildCheckpointAdaptiveBy("dst")
+    // Both directions come from ONE pass over the pairs: a union would
+    // evaluate `pairs` twice once nothing below it is a reusable exchange.
+    val edges = pairs.toDF("a", "b").na.drop()
+      .select(explode(array(
+        struct(col("a").as("src"), col("b").as("dst")),
+        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
+      .select("e.src", "e.dst")
+      .buildCheckpointBy("dst")
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
-      .buildCheckpointAdaptiveBy("id")
+      .buildCheckpointBy("id")
     // One round: label ← min(label, neighbors' labels, label[label]).
     // The final left join follows the candidate label one hop through
     // the PREVIOUS round's label table (pointer jumping); every label
@@ -497,9 +492,8 @@ object DedupQueries {
     // Vocab broadcast matches prefixJaccardPairs; at 100 TB both become
     // a persisted df-annotated index.
     "dedup_containment_prefix" -> ((s, d) => {
-      // plain checkpoint — ADAPTIVE STAMP TRIED AND REVERTED (r17):
-      // at sf1, where the index crosses the stamp threshold, the
-      // doc_id/s stamped pair below measured jobs 19→28, tasks
+      // plain checkpoint — KEYED STAMPS TRIED AND REVERTED (r17): at
+      // sf1 the doc_id/s stamped pair below measured jobs 19→28, tasks
       // 440→751, shuffle 1535→2318 MB, wall +7..+40% (both A/B
       // rounds) — this query's candidate probe reads the PREFIX table
       // (tiny) against the full index, so the pinned-count stamps cost
@@ -527,7 +521,7 @@ object DedupQueries {
         .filter(col("df") >= 2)
         .select("doc_id", "s")
       val df2 = dfreq.filter(col("df") >= 2).select("s")
-      // plain checkpoint — adaptive s-stamp tried and reverted with the
+      // plain checkpoint — the s-stamp was tried and reverted with the
       // sh site above (r17 sf1 A/B; r16 had measured the always-on
       // stamp at +0.4 s at bench scale for the same reason)
       val full = sh.join(df2, Seq("s"), "left_semi").select("doc_id", "s")

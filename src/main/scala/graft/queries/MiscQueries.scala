@@ -87,20 +87,17 @@ object MiscQueries {
         .distinct()
       val bi = eo.unionAll(
         eo.select(col("dst").as("src"), col("src").as("dst")))
-        // size-ADAPTIVE stamp (r17, VERDICT item 3): below
-        // spark.graft.stamp.minBytes this is byte-identical to the plain
-        // checkpoint the r16 A/B measured as the bench-scale winner (the
-        // src-stamped variant regressed +0.6 s — pinned-count stages
-        // cost more than the per-iteration narrow exchanges they replace
-        // on tiny tables); above it the edges re-checkpoint keyed+stamped
-        // by src so every iteration's edge join is co-partitioned — the
-        // 100 TB shape the r16 revert had hard-coded away.
-        .buildCheckpointAdaptiveBy("src") // 3 iterations + degree re-scan
+        // keyed: every iteration's edge join and the degree aggregate
+        // read the edges on src
+        .buildCheckpointBy("src") // 3 iterations + the degree build
       // deg deliberately NOT fused into the checkpointed edge table: an
       // sf0.1 A/B (one join per iteration vs two) showed no gain beyond
       // box noise — the deg build side is tiny either way, and fusing
-      // widens every checkpointed row by a column.
+      // widens every checkpointed row by a column. Keyed like the edges,
+      // and materialized: with no exchange between it and the edges,
+      // every reference would re-aggregate them.
       val deg = bi.groupBy("src").agg(count(lit(1)).as("deg"))
+        .buildCheckpointBy("src") // count + every iteration's join
       val nn = deg.count() // bounded driver state: one scalar
       var ranks = deg.select(col("src").as("node"),
         lit(1.0 / nn).as("r"))

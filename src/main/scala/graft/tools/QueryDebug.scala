@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
-/** Dev utility: inspect, time, audit or dump registered queries by name.
+/** Dev utility: inspect, time or audit registered queries by name.
   *
   *   QueryDebug explain <query>[,query...] [sfDir]    — physical plan dump
   *   QueryDebug explainf <query>[,query...] <outDir> <suffix> [sfDir]
@@ -16,8 +16,6 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   *   QueryDebug time <sfDir> <query>[,query...] [reps] — wall clock, work
   *                                                     counters, codegen compilations
   *   QueryDebug audit [sfDir]                          — wide-shuffle audit
-  *   QueryDebug dump <sfDir> <query>[,query...] <outDir>
-  *                                                     — Verify's parquet dump
   *   QueryDebug plans <out.md> [sfDir]                 — regenerate PLANS.md
   *   QueryDebug codegen <sfDir> <query>[,query...]     — codegen working set
   *
@@ -32,12 +30,11 @@ object QueryDebug {
         case "explain"  => (s, a) => { explain(s, a); true }
         case "explainf" => (s, a) => { explainf(s, a); true }
         case "time"     => (s, a) => { time(s, a); true }
-        case "dump"     => (s, a) => { dump(s, a); true }
         case "plans"    => (s, a) => { plans(s, a); true }
         case "codegen"  => (s, a) => { codegen(s, a); true }
         case "audit"    => audit
         case other => sys.error(s"unknown mode '$other' " +
-          "(expected explain|explainf|time|audit|dump|plans|codegen)")
+          "(expected explain|explainf|time|audit|plans|codegen)")
       }
     val spark = graft.LocalSession("ERROR")
     val clean = try run(spark, args.drop(1)) finally spark.stop()
@@ -98,15 +95,6 @@ object QueryDebug {
       Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"), txt)
       println(s"wrote $outDir/${n}_$suffix.txt (${txt.length} chars)")
     }
-  }
-
-  /** dump <sfDir> <names,comma-sep> <outDir>: Verify's per-query parquet
-    * dump for a subset — iterating on ONE oracle without a full Verify. */
-  private def dump(spark: SparkSession, args: Array[String]): Unit = {
-    val Array(sfDir, names, outDir) = args
-    for (n <- names.split(","))
-      graft.SparkEntry.queries(n)(spark, sfDir).coalesce(1)
-        .write.mode("overwrite").parquet(s"$outDir/$n")
   }
 
   // raw source columns by substring; derived wide names (token arrays /

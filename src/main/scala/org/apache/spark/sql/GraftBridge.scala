@@ -162,18 +162,6 @@ object GraftBridge {
     case _ => None
   }
 
-  /** Bytes (memory + disk) of `rddId`'s cached blocks as the block
-    * manager master holds them. Executors report every block they store
-    * to the master before their task ends, so after the job that stored
-    * them this is exact; `SparkContext.getRDDStorageInfo` reads the
-    * status store instead, which the listener bus fills asynchronously. */
-  def storedRddBytes(spark: SparkSession, rddId: Int): Long =
-    spark.sparkContext.env.blockManager.master.getStorageStatus.iterator
-      .flatMap(_.rddBlocks.iterator)
-      .collect { case (org.apache.spark.storage.RDDBlockId(`rddId`, _), st) =>
-        st.memSize + st.diskSize }
-      .sum
-
   /** Re-stamp a checkpointed DataFrame's `LogicalRDD` with the hash
     * partitioning its rows PHYSICALLY have. `Dataset.localCheckpoint`
     * tries to carry the child plan's partitioning into the LogicalRDD,
@@ -211,6 +199,9 @@ object GraftBridge {
           })
         if (keys.exists(_.isEmpty)) ck
         else {
+          // named, so a plan tells a stamped table from a plain
+          // checkpoint (with AQE off, both can carry a hash partitioning)
+          lr.rdd.setName(s"keyed checkpoint by ${keyNames.mkString(",")}")
           // carry the checkpoint's stats forward (computeStats resolves
           // the originStats localCheckpoint captured) so join-strategy
           // estimates are unchanged by the re-stamp
