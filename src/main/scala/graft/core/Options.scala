@@ -1,21 +1,24 @@
 package graft.core
 
 /** CLI options — same surface and defaults as the reference
-  * (/root/reference/src/main/java/org/rm3l/beam/firestore/WordCountToFirestorePipeline.java:57-85,
+  * (its src/main/java/org/rm3l/beam/firestore/WordCountToFirestorePipeline.java:57-85,
   * impl/BatchWriteImplementation.java:61-68):
   *
-  *   --implementation=naive|batch          (default "naive")
-  *   --inputFile=<path>                    (default the King Lear sample;
-  *                                          here defaults to the local text
-  *                                          fixture since this env has no
-  *                                          egress)
+  *   --implementation=naive|batch|streaming
+  *                                         (default "naive"; streaming is
+  *                                          graft's own, see Main)
+  *   --inputFile=<path>                    (required here; the reference
+  *                                          defaults to its King Lear
+  *                                          sample)
   *   --outputDir=<path>                    (required — stands in for
   *                                          --outputGoogleCloudProject: the
   *                                          root of the local document store)
   *   --outputCollectionPath=<name>         (optional; defaults to the input
   *                                          file's basename, matching
   *                                          impl/NaiveImplementation.java:31-34)
-  *   --maxBatchSize=N                      (default 500, batch impl only —
+  *   --maxBatchSize=N                      (default 500, batch and
+  *                                          streaming impls; naive writes
+  *                                          one doc per batch —
   *                                          FirestoreUpdateDoFn.java:19)
   */
 final case class Options(
@@ -32,9 +35,6 @@ final case class Options(
 }
 
 object Options {
-  /** Parse `--key=value` args with validation-on-parse, mirroring
-    * `PipelineOptionsFactory.fromArgs(args).withValidation()`
-    * (WordCountToFirestorePipeline.java:25-26). */
   /** The reference's original flag spellings are accepted as aliases
     * (WordCountToFirestorePipeline.java:57-85,
     * impl/BatchWriteImplementation.java:61-68) so its invocations port
@@ -44,6 +44,9 @@ object Options {
     "outputFirestoreCollectionPath" -> "outputCollectionPath",
     "firestoreMaxBatchSize" -> "maxBatchSize")
 
+  /** Parse `--key=value` args with validation-on-parse, mirroring
+    * `PipelineOptionsFactory.fromArgs(args).withValidation()`
+    * (WordCountToFirestorePipeline.java:25-26). */
   def parse(args: Array[String]): Options = {
     val kv = args.map { a =>
       require(a.startsWith("--") && a.contains("="), s"bad argument: $a")

@@ -37,16 +37,16 @@ object Salting {
   /** Skew-salted equi-join: the fact side gets a deterministic salt in
     * [0, buckets); the dim side is replicated once per salt value
     * (explode of a literal sequence — buckets× the SMALL side only), and
-    * the join runs on (key, salt). A hot fact key's rows then land on
+    * the join runs on (keys, salt). A hot fact key's rows then land on
     * `buckets` reducers instead of one. Same remedy AQE's skew-join
     * split applies at runtime, expressed statically for engines/configs
     * where AQE can't see the skew (or for deterministic plan pinning).
-    * Result == plain `fact JOIN dim ON key` exactly; only the
+    * Result == plain `fact JOIN dim USING (keys)` exactly; only the
     * partitioning differs. */
   def saltedJoin(
       fact: DataFrame,
       dim: DataFrame,
-      key: String,
+      keys: Seq[String],
       spreadOn: Column,
       buckets: Int = 16): DataFrame = {
     require(buckets > 0, s"saltedJoin: buckets must be positive ($buckets)")
@@ -57,6 +57,6 @@ object Salting {
     val replicatedDim = dim
       .withColumn("__salt",
         explode(sequence(lit(0L), lit(buckets.toLong - 1))))
-    saltedFact.join(replicatedDim, Seq(key, "__salt")).drop("__salt")
+    saltedFact.join(replicatedDim, keys :+ "__salt").drop("__salt")
   }
 }

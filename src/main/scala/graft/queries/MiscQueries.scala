@@ -601,7 +601,7 @@ object MiscQueries {
           col("o_totalprice").cast(DecimalType(12, 2)).as("p"))
       val dim = Tables.customer(s, d)
         .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
-      Salting.saltedJoin(fact, dim, "custkey", col("o_orderkey"), 8)
+      Salting.saltedJoin(fact, dim, Seq("custkey"), col("o_orderkey"), 8)
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_orders"),
           sum(col("p")).cast("double").as("revenue"))

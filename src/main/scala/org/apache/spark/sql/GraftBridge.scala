@@ -125,7 +125,7 @@ object GraftBridge {
       output(ia).dataType == LongType && output(ib).dataType == LongType,
       s"localCheckpointCounting: need long columns '$aName', '$bName' in " +
         output.map(a => s"${a.name}:${a.dataType.simpleString}").mkString(", "))
-    val acc = spark.sparkContext.longAccumulator("graft.checkpoint.changed")
+    val acc = spark.sparkContext.longAccumulator("localCheckpointCounting changed")
     // one SQL execution, like Dataset.localCheckpoint's own, so listeners
     // on SQL executions (QueryDebug's audit) see the plan it runs
     val rdd = execution.SQLExecution.withNewExecutionId(

@@ -97,7 +97,7 @@ class JoinStrategySpec extends SparkSpec {
     val viaSalt =
       try {
         aqeOff.foreach { case (k, v) => spark.conf.set(k, v) }
-        graft.operators.Salting.saltedJoin(fact, dim, "k", col("rid"), 8)
+        graft.operators.Salting.saltedJoin(fact, dim, Seq("k"), col("rid"), 8)
           .select("k", "rid", "payload", "seg")
           .as[(Long, Long, String, String)].collect().toSet
       } finally prev2.foreach {

@@ -398,23 +398,21 @@ class RobustnessSpec extends SparkSpec {
       (202L, 0xF0F0L), // far
       (203L, 0x0000L), (204L, 0x0001L), // a second near pair
       (205L, 0x0F0FL << 32), (206L, 0xFFFFL))).toDF("doc_id", "sig")
-    def run(thr: String): Set[(Long, Long, Int)] = {
-      spark.conf.set("graft.signaturePairs.hotPieceThreshold", thr)
-      try DedupQueries.signaturePairs(sigs)
-        .as[(Long, Long, Int)].collect().toSet
-      finally spark.conf.unset("graft.signaturePairs.hotPieceThreshold")
-    }
-    val guarded = run("50")     // 120-row buckets >> 50 ⇒ salted path
-    val plain = run("1000000")  // guard inert ⇒ the historical plan
+    def run(thr: Long, cap: Long = 100000L): Set[(Long, Long, Int)] =
+      DedupQueries.signaturePairs(sigs, hotPieceThreshold = thr,
+        hotListBroadcastCap = cap).as[(Long, Long, Int)].collect().toSet
+    val guarded = run(50)       // 120-row buckets >> 50 ⇒ salted path
+    val plain = run(1000000)    // guard inert ⇒ the historical plan
     assert(guarded == plain,
       s"salted path diverged: only-guarded=${guarded.diff(plain).take(3)} " +
         s"only-plain=${plain.diff(guarded).take(3)}")
     // third plan variant (round 14): hot list PAST the broadcast cap —
-    // the shuffle semi/anti-join fallback must produce the same set
-    spark.conf.set("graft.signaturePairs.hotListBroadcastCap", "0")
+    // the shuffle semi/anti-join fallback must produce the same set.
+    // Auto-broadcast off, or Spark broadcasts the tiny hot list anyway
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val shuffled =
-      try run("50")
-      finally spark.conf.unset("graft.signaturePairs.hotListBroadcastCap")
+      try run(50, cap = 0)
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert(shuffled == plain,
       s"shuffle hot-list path diverged: ${shuffled.diff(plain).take(3)}")
     // the identical family pairs completely at hamming 0...
@@ -425,60 +423,28 @@ class RobustnessSpec extends SparkSpec {
     assert(!guarded.exists(p => p._1 == 202L || p._2 == 202L))
   }
 
-  test("signaturePairs probe memo: hit keeps the stale plan choice, conf bypass re-probes, pair set identical throughout") {
-    // The memo's documented contract (round 14): staleness affects PLAN
-    // CHOICE only, never the pair set. Pin both halves plus the round-15
-    // bypass conf: rewrite the data under the SAME analyzed plan (same
-    // parquet path, same schema ⇒ same semanticHash ⇒ memo key
-    // collision by design), then observe which physical shape each mode
-    // picks via the salted path's marker column.
+  test("signaturePairs picks its plan from the data it is given on every call") {
+    // the same analyzed plan over a rewritten parquet directory: the
+    // second call must probe the new data, see its hot family and salt
     import graft.queries.DedupQueries
-    val dir = tempDir("graft-memo").toString
+    val dir = tempDir("graft-replan").toString
     def write(rows: Seq[(Long, Long)]): Unit =
       rows.toDF("doc_id", "sig").repartition(2)
         .write.mode("overwrite").parquet(dir)
-    def sigs = spark.read.parquet(dir)
-    def planOf(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.optimizedPlan.toString
+    def pairs(): org.apache.spark.sql.DataFrame =
+      DedupQueries.signaturePairs(spark.read.parquet(dir),
+        hotPieceThreshold = 50)
+    def salted(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.toString.contains("salt")
     // cold corpus: no bucket anywhere near the threshold
     write((1L to 30L).map(i => (i, i * 0x9E3779B97F4A7C15L)))
-    spark.conf.set("graft.signaturePairs.hotPieceThreshold", "50")
-    try {
-      DedupQueries.probeMemo.clear()
-      val cold = DedupQueries.signaturePairs(sigs)
-      assert(!planOf(cold).contains("salt"),
-        "cold corpus must take the plain join")
-      assert(DedupQueries.probeMemo.size == 1, "probe result memoized")
-      // rewrite: degenerate 120-doc family — every piece bucket hot
-      write((1L to 120L).map(i => (i, 0x0F0FL)) :+ (200L, 0x0F0EL))
-      // memo ON (default): the stale nHot=0 keeps the PLAIN plan —
-      // perf-only staleness, but the pair set must still be exact
-      val stale = DedupQueries.signaturePairs(sigs)
-      assert(!planOf(stale).contains("salt"),
-        "memo hit must reuse the stale plan choice")
-      val staleSet = stale.as[(Long, Long, Int)].collect().toSet
-      assert(staleSet.count(_._3 == 0) == 120 * 119 / 2)
-      // bypass: a fresh probe sees the hot family and salts
-      spark.conf.set("graft.signaturePairs.probeMemo", "off")
-      val fresh =
-        try DedupQueries.signaturePairs(sigs)
-        finally spark.conf.unset("graft.signaturePairs.probeMemo")
-      assert(planOf(fresh).contains("salt"),
-        "probeMemo=off must re-probe and pick the salted path")
-      assert(fresh.as[(Long, Long, Int)].collect().toSet == staleSet,
-        "plan choice changed the pair set")
-      // loud parse (advisor round-15): 'true' used to silently mean
-      // OFF — a behavior flip nobody asked for; only on|off may pass
-      spark.conf.set("graft.signaturePairs.probeMemo", "true")
-      try {
-        val e = intercept[IllegalArgumentException] {
-          DedupQueries.signaturePairs(sigs)
-        }
-        assert(e.getMessage.contains("probeMemo"))
-      } finally spark.conf.unset("graft.signaturePairs.probeMemo")
-    } finally {
-      spark.conf.unset("graft.signaturePairs.hotPieceThreshold")
-      DedupQueries.probeMemo.clear()
-    }
+    assert(!salted(pairs()), "cold corpus must take the plain join")
+    // rewrite: degenerate 120-doc family — every piece bucket hot
+    write((1L to 120L).map(i => (i, 0x0F0FL)) :+ (200L, 0x0F0EL))
+    val hot = pairs()
+    assert(salted(hot), "the rewritten corpus must take the salted path")
+    val got = hot.as[(Long, Long, Int)].collect().toSet
+    assert(got.count(_._3 == 0) == 120 * 119 / 2)
+    assert(got.count(p => p._2 == 200L && p._3 == 1) == 120)
   }
 }

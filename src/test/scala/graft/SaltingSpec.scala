@@ -40,11 +40,19 @@ class SaltingSpec extends SparkSpec {
       (1 to 100).map(i => ((i % 9 + 2).toLong, (1000 + i).toLong)))
       .toDF("k", "rid")
     val dim = (1L to 10L).map(k => (k, s"seg$k")).toDF("k", "seg")
-    val joined = Salting.saltedJoin(fact, dim, "k", col("rid"), 8)
-    val plain = fact.join(dim, Seq("k"))
-    assert(joined.count() == plain.count())
-    assert(joined.select("k", "rid", "seg").collect().map(_.toSeq).toSet ==
-      plain.select("k", "rid", "seg").collect().map(_.toSeq).toSet)
+    // a second key joins alongside the salt; rid % 3 == 2 has no dim row
+    val fact2 = fact.withColumn("k2", col("rid") % 3)
+    val dim2 = dim.crossJoin((0L to 1L).toDF("k2"))
+      .withColumn("seg", concat_ws("/", col("seg"), col("k2")))
+    for ((f, d, keys) <- Seq((fact, dim, Seq("k")),
+        (fact2, dim2, Seq("k", "k2")))) {
+      val out = (keys :+ "rid" :+ "seg").map(col)
+      val joined = Salting.saltedJoin(f, d, keys, col("rid"), 8)
+      val plain = f.join(d, keys)
+      assert(joined.count() == plain.count(), keys)
+      assert(joined.select(out: _*).collect().map(_.toSeq).toSet ==
+        plain.select(out: _*).collect().map(_.toSeq).toSet, keys)
+    }
     // the replicated dim side really carries buckets copies per key
     val rep = dim.withColumn("__salt",
       explode(sequence(lit(0L), lit(7L)))).count()
